@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.{Cases, Clip, GeoJson, MarchingSquares, Poly, ContourResult, Tiling}
+import graft.core.{Cases, Clip, GeoJson, MarchingSquares, Poly, ContourResult}
 import graft.docs.DocCodec
 import graft.engine.ContourEngine
 import graft.model._
@@ -128,13 +128,9 @@ object SparkEntry {
     var n = 0L; var qx = 0L; var qy = 0L
     rings.foreach { ringSeq =>
       // indexed access over a LINKED Seq (the encoder's post-shuffle /
-      // post-checkpoint representation) is O(i) per hop — copy to a
-      // primitive array first (one O(n) pass; see SpatialOps.ringArr)
-      val ring: Array[Double] = ringSeq match {
-        case w: scala.collection.mutable.WrappedArray[_] =>
-          w.array.asInstanceOf[Array[Double]]
-        case _ => ringSeq.toArray
-      }
+      // post-checkpoint representation) is O(i) per hop — walk a
+      // primitive array instead
+      val ring = graft.engine.SpatialOps.ringArr(ringSeq)
       // drop the closing duplicate — conditionally, because the reference's
       // band-ring dedup can remove it (wrap segment collapsed by smoothing);
       // value-wise the trailing point then equals the first anyway, so the
@@ -193,10 +189,7 @@ object SparkEntry {
       val tiles = eventTilesF(spark, dir)
       val ts = EventsGrid.Thresholds
       tiles.flatMap { t =>
-        val s = Tiling.TileSpec(t.tileX, t.tileY, t.sx0, t.sy0, t.tw, t.th,
-          t.sx0, t.sy0, t.vw, t.vh,
-          if (t.sx0 == 0) -1 else t.sx0, t.sx0 + t.tw - 1,
-          if (t.sy0 == 0) -1 else t.sy0, t.sy0 + t.th - 1)
+        val s = ContourEngine.tileSpec(t)
         ts.iterator.flatMap { th =>
           val hist = MarchingSquares.caseHistogram(t.values, t.vw, t.vh, t.sx0, t.sy0,
             t.gdx, t.gdy, s.cx0, s.cx1, s.cy0, s.cy1, th)

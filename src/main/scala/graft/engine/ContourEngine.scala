@@ -2,7 +2,7 @@ package graft.engine
 
 import graft.core._
 import graft.model._
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 import scala.collection.mutable.ArrayBuffer
@@ -24,17 +24,11 @@ import scala.collection.mutable.ArrayBuffer
   *
   * Output rings are byte-identical to the reference's single-threaded
   * output (order and rotation included) — see Stitcher/FragmentMerge.
+  * Each step (kernel rows, merge rows, round count, ring reducer) is
+  * written once on the companion object; the streaming and SQL paths call
+  * the same functions.
   */
-/** @param stitchSalts when > 1, the final (global per grid+threshold)
-  *   stitch round is preceded by a salted combiner round: open fragments
-  *   split by a deterministic hash of their block key, merged per salt,
-  *   so the one global reducer of a huge grid sees pre-compacted chains
-  *   instead of every boundary fragment. FragmentMerge is arrival-order
-  *   independent (globally unique in/out segment keys per vertex), so the
-  *   output stays byte-identical — asserted by ContourEngineSpec.
-  */
-final class ContourEngine(spark: SparkSession, cfg: JobConfig,
-                          stitchSalts: Int = 0) {
+final class ContourEngine(spark: SparkSession, cfg: JobConfig) {
   import spark.implicits._
 
   private val thresholds: Array[Double] = cfg.thresholds.toArray
@@ -69,21 +63,8 @@ final class ContourEngine(spark: SparkSession, cfg: JobConfig,
     val smooth = cfg.smooth
     val ts = thresholds
     tiles.flatMap { t =>
-      val spec = Tiling.TileSpec(t.tileX, t.tileY, t.sx0, t.sy0, t.tw, t.th,
-        t.sx0, t.sy0, t.vw, t.vh,
-        if (t.sx0 == 0) -1 else t.sx0, t.sx0 + t.tw - 1,
-        if (t.sy0 == 0) -1 else t.sy0, t.sy0 + t.th - 1)
-      val marker = Iterator.single(
-        RingFragRow(t.gridId, -1, closed = true, t.tileX, t.tileY, 0L, 0L, 0L, 0, Array.empty))
-      val outs = Tiling.tileKernelMulti(t.values, spec, t.gdx, t.gdy, ts, smooth)
-      marker ++ ts.indices.iterator.flatMap { ti =>
-        val out = outs(ti)
-        out.rings.iterator.map(r =>
-          RingFragRow(t.gridId, ti, closed = true, 0, 0, 0L, 0L, r.maxKey, 0, r.pts)) ++
-          out.frags.iterator.map(f =>
-            RingFragRow(t.gridId, ti, closed = false, t.tileX, t.tileY,
-              f.startKey, f.endKey, f.maxKey, f.anchorPos, f.pts))
-      }
+      Iterator.single(RingFragRow(t.gridId, -1, closed = true, t.tileX, t.tileY,
+        0L, 0L, 0L, 0, Array.empty)) ++ ContourEngine.tileRows(t, ts, smooth)
     }
   }
 
@@ -107,11 +88,7 @@ final class ContourEngine(spark: SparkSession, cfg: JobConfig,
         p.count()
         p
       }
-    // hierarchy pays off only when one grid spans many tiles; for <= 8x8
-    // tiles per grid a single global round is fewer sequential stages
-    val levels =
-      if (maxTileCoord <= 7) 1
-      else math.max(1, 32 - Integer.numberOfLeadingZeros(math.max(1, maxTileCoord)))
+    val levels = ContourEngine.mergeLevels(maxTileCoord)
     // Merge rounds are ROLLED FORWARD: round l's state = every cross-tile
     // closed ring found in rounds 1..l plus the still-open fragments.
     // Intermediate states (l < levels) persist eagerly (one count) and the
@@ -125,25 +102,9 @@ final class ContourEngine(spark: SparkSession, cfg: JobConfig,
     var state: Dataset[RingFragRow] = null // persisted mixed state of rounds >= 1
     var l = 1
     while (l <= levels) {
-      var open = if (state == null) kernelOut.filter(!_.closed) else state.filter(!_.closed)
-      var prevClosed = if (state == null) spark.emptyDataset[RingFragRow] else state.filter(_.closed)
-      if (l == levels && stitchSalts > 1) {
-        // salted combiner before the global round: bounds the final
-        // reducer's input for huge grids (see class doc). Two consumers at
-        // the final action -> persist; when it replaces an intermediate
-        // round's cache, materialize it first so that cache can drop.
-        val salted = track(prevClosed.union(mergeOpenSalted(open, stitchSalts))
-          .persist(StorageLevel.MEMORY_AND_DISK))
-        if (state != null) { salted.count(); release(state) }
-        state = salted
-        prevClosed = salted.filter(_.closed)
-        open = salted.filter(!_.closed)
-      }
-      // round l's input coords are already level-(l-1) block coords, so each
-      // round shifts by ONE more bit (tileX >> l overall); the final round
-      // merges globally per (grid, threshold): shift 31 zeroes every
-      // non-negative coordinate
-      val next = prevClosed.union(mergeOpen(open, if (l == levels) 31 else 1, l == levels))
+      val open = if (state == null) kernelOut.filter(!_.closed) else state.filter(!_.closed)
+      val prevClosed = if (state == null) spark.emptyDataset[RingFragRow] else state.filter(_.closed)
+      val next = prevClosed.union(mergeOpen(open, l, levels))
       if (l < levels) {
         val p = track(next.persist(StorageLevel.MEMORY_AND_DISK))
         p.count()
@@ -159,87 +120,58 @@ final class ContourEngine(spark: SparkSession, cfg: JobConfig,
     kernelClosed.union(state.filter(_.closed))
   }
 
-  /** Salted pre-final combiner: same merge, grouped by a deterministic
-    * block-key hash instead of a spatial parent. Emitted open fragments
-    * carry (0, 0) block coords — the only consumer is the global round.
+  /** Merge round `level` of `levels`: group open fragments by blocks one
+    * bit coarser than their input coords (round l's input coords are
+    * already level-(l-1) block coords, so tileX >> l overall) and stitch
+    * within each block. The final round merges globally per (grid,
+    * threshold) — shift 31 zeroes every non-negative coordinate — and
+    * fails loudly if anything stays open.
     */
-  private def mergeOpenSalted(open: Dataset[RingFragRow], nSalts: Int): Dataset[RingFragRow] =
-    open.groupByKey(r => (r.gridId, r.ti,
-        graft.index.CellIndex.salt(
-          graft.index.CellIndex.morton(r.bx, r.by), r.ti.toLong, nSalts)))
-      .flatMapGroups { (key: (String, Int, Int), it: Iterator[RingFragRow]) =>
-        val (gid, ti, _) = key
-        val frags = it.map(r => OpenFrag(r.pts, r.startKey, r.endKey, r.maxKey, r.anchorPos)).toSeq
-        val res = FragmentMerge.merge(frags)
-        res.rings.iterator.map(cr =>
-          RingFragRow(gid, ti, closed = true, 0, 0, 0L, 0L, cr.maxKey, 0, cr.pts)) ++
-          res.open.iterator.map(f =>
-            RingFragRow(gid, ti, closed = false, 0, 0, f.startKey, f.endKey, f.maxKey, f.anchorPos, f.pts))
-      }
-
-  /** One hierarchical merge round: group open fragments by 2^shift-tile
-    * blocks and stitch within each block.
-    */
-  private def mergeOpen(open: Dataset[RingFragRow], shift: Int,
-                        isFinal: Boolean): Dataset[RingFragRow] =
+  private def mergeOpen(open: Dataset[RingFragRow], level: Int,
+                        levels: Int): Dataset[RingFragRow] = {
+    val isFinal = level == levels
+    val shift = if (isFinal) 31 else 1
     open.groupByKey(r => (r.gridId, r.ti,
         graft.index.CellIndex.parent(graft.index.CellIndex.morton(r.bx, r.by), shift)))
       .flatMapGroups { (key: (String, Int, Long), it: Iterator[RingFragRow]) =>
         val (gid, ti, cell) = key
-        val bx = graft.index.CellIndex.mortonX(cell)
-        val by = graft.index.CellIndex.mortonY(cell)
-        val frags = it.map(r => OpenFrag(r.pts, r.startKey, r.endKey, r.maxKey, r.anchorPos)).toSeq
-        val res = FragmentMerge.merge(frags)
-        if (isFinal && res.open.nonEmpty)
+        val out = ContourEngine.mergeRows(gid, ti,
+          graft.index.CellIndex.mortonX(cell), graft.index.CellIndex.mortonY(cell), it)
+        if (isFinal && out.exists(!_.closed))
           throw new IllegalStateException(
-            s"${res.open.length} fragments failed to close for grid=$gid ti=$ti")
-        res.rings.iterator.map(cr =>
-          RingFragRow(gid, ti, closed = true, 0, 0, 0L, 0L, cr.maxKey, 0, cr.pts)) ++
-          res.open.iterator.map(f =>
-            RingFragRow(gid, ti, closed = false, bx, by, f.startKey, f.endKey, f.maxKey, f.anchorPos, f.pts))
+            s"${out.count(!_.closed)} fragments failed to close for grid=$gid ti=$ti")
+        out.iterator
       }
+  }
 
-  /** Lake-checkpointed merge fixpoint: round 0 = kernel output, round l =
-    * merge level l; every round is committed as a snapshot of `lakeTable`
-    * (atomic manifest, per-partition row metrics, lineage chain), and on
-    * restart the latest completed round is read back and the fixpoint
-    * resumes after it — so a failed long job never re-runs finished rounds.
-    * Each round reads its input from the previous round's parquet, which
+  /** Lake-checkpointed merge fixpoint with the same block hierarchy as
+    * [[closedRings]]: round 0 = kernel output, round l = merge level l;
+    * every round is committed as a snapshot of `lakeTable` (atomic
+    * manifest, per-partition row metrics, lineage chain), and on restart
+    * the latest completed round is read back and the fixpoint resumes
+    * after it — so a failed long job never re-runs finished rounds. Each
+    * round reads its input from the previous round's parquet, which
     * doubles as reliable materialization on a real cluster.
-    */
-  /** The resumable path has the same scale properties as the in-memory one:
-    * the full one-bit-per-round block hierarchy, and — when `stitchSalts` >
-    * 1 — the salted combiner committed as its own `salt` snapshot right
-    * before the global round, so a restart never re-runs it either.
     */
   def closedRingsCheckpointed(tiles: Dataset[TileRow], lakeTable: String,
                               maxTileCoord: Int): Dataset[RingFragRow] = {
     import graft.lake.Lake
-    val levels =
-      if (maxTileCoord <= 7) 1
-      else math.max(1, 32 - Integer.numberOfLeadingZeros(math.max(1, maxTileCoord)))
-    // ops in execution order; resume from the LATEST committed one
-    val ops: Vector[String] = (0 until levels).map(l => s"round-$l").toVector ++
-      (if (stitchSalts > 1) Vector("salt") else Vector.empty) :+ s"round-$levels"
-    val resume = ops.indices.reverse.iterator
-      .map(i => (i, Lake.latestFor(spark, lakeTable, ops(i))))
-      .collectFirst { case (i, Some(snap)) => (i, snap) }
-    var (idx, state) = resume match {
-      case Some((i, snap)) => (i, Lake.read(spark, snap).as[RingFragRow])
+    val levels = ContourEngine.mergeLevels(maxTileCoord)
+    // resume from the LATEST committed round
+    val resume = (0 to levels).reverse.iterator
+      .map(l => (l, Lake.latestFor(spark, lakeTable, s"round-$l")))
+      .collectFirst { case (l, Some(snap)) => (l, snap) }
+    var (l, state) = resume match {
+      case Some((l0, snap)) => (l0, Lake.read(spark, snap).as[RingFragRow])
       case None =>
         val snap = Lake.commit(spark, lakeTable, kernelRows(tiles).toDF(), "round-0")
         (0, Lake.read(spark, snap).as[RingFragRow])
     }
-    while (idx < ops.length - 1) {
-      idx += 1
-      val op = ops(idx)
-      val merged =
-        if (op == "salt") mergeOpenSalted(state.filter(!_.closed), stitchSalts)
-        else {
-          val l = op.stripPrefix("round-").toInt
-          mergeOpen(state.filter(!_.closed), if (l == levels) 31 else 1, l == levels)
-        }
-      val snap = Lake.commit(spark, lakeTable, state.filter(_.closed).union(merged).toDF(), op)
+    while (l < levels) {
+      l += 1
+      val merged = mergeOpen(state.filter(!_.closed), l, levels)
+      val snap = Lake.commit(spark, lakeTable,
+        state.filter(_.closed).union(merged).toDF(), s"round-$l")
       state = Lake.read(spark, snap).as[RingFragRow]
     }
     state.filter(_.closed)
@@ -275,74 +207,31 @@ final class ContourEngine(spark: SparkSession, cfg: JobConfig,
   def contours(tiles: Dataset[TileRow], maxTileCoordHint: Option[Int] = None): Dataset[ContourRow] =
     contoursFrom(closedOf(tiles, maxTileCoordHint))
 
-  /** Every (grid, ti in 0..n-1) group is guaranteed to exist in the
-    * assembly shuffle: real ring rows pass through, and each tile's ti = -1
-    * marker fans out to one synthetic EMPTY row per threshold index (empty
-    * pts — impossible for a real ring). Assembly filters the synthetics
-    * and so emits the reference's empty geometry for ring-less thresholds
-    * from the SAME shuffle — fully distributed backfill with zero extra
-    * stages (no driver collect, no distinct/except barrier).
-    */
-  private def withPotentialKeys(closed: Dataset[RingFragRow],
-                                nKeys: Int): Dataset[RingFragRow] =
-    closed.flatMap { r =>
-      if (r.ti >= 0) Iterator.single(r)
-      else (0 until nKeys).iterator.map(ti =>
-        RingFragRow(r.gridId, ti, closed = true, 0, 0, 0L, 0L, Long.MinValue, 0, Array.empty))
+  /** Assembly from closed rings + ti = -1 markers (post-merge state). */
+  def contoursFrom(closed: Dataset[RingFragRow]): Dataset[ContourRow] =
+    ContourEngine.reduceRings(closed, cfg) { (gid, t, rings) =>
+      val polys = Assembly.assembleContour(rings.toSeq)
+      ContourRow(gid, t, polys.map(p => PolyRow(p.exterior.toSeq, p.holes.map(_.toSeq))))
     }
-
-  /** Assembly from closed rings + markers (post-merge state). */
-  def contoursFrom(closed: Dataset[RingFragRow]): Dataset[ContourRow] = {
-    val ts = thresholds
-    val (xs, ys, xo, yo) = (cfg.xStep, cfg.yStep, cfg.xOrigin, cfg.yOrigin)
-    val ident = cfg.isIdentityAffine
-    withPotentialKeys(closed, ts.length)
-      .groupByKey(r => (r.gridId, r.ti))
-      .mapGroups { (key: (String, Int), it: Iterator[RingFragRow]) =>
-        val (gid, ti) = key
-        val rings = it.filter(_.pts.nonEmpty).toArray.sortBy(_.maxKey).map { r =>
-          if (!ident) Assembly.applyAffine(r.pts, xs, ys, xo, yo)
-          r.pts
-        }
-        val polys = Assembly.assembleContour(rings.toSeq)
-        ContourRow(gid, ts(ti), polys.map(p => PolyRow(p.exterior.toSeq, p.holes.map(_.toSeq))))
-      }
-  }
 
   /** Isolines — the reference's `lines()` distributed. */
   def lines(tiles: Dataset[TileRow], maxTileCoordHint: Option[Int] = None): Dataset[LineRow] =
     linesFrom(closedOf(tiles, maxTileCoordHint))
 
-  def linesFrom(closed: Dataset[RingFragRow]): Dataset[LineRow] = {
-    val ts = thresholds
-    val (xs, ys, xo, yo) = (cfg.xStep, cfg.yStep, cfg.xOrigin, cfg.yOrigin)
-    val ident = cfg.isIdentityAffine
-    withPotentialKeys(closed, ts.length)
-      .groupByKey(r => (r.gridId, r.ti))
-      .mapGroups { (key: (String, Int), it: Iterator[RingFragRow]) =>
-        val (gid, ti) = key
-        val rings = it.filter(_.pts.nonEmpty).toArray.sortBy(_.maxKey).map { r =>
-          if (!ident) Assembly.applyAffine(r.pts, xs, ys, xo, yo)
-          r.pts.toSeq
-        }
-        LineRow(gid, ts(ti), rings.toSeq)
-      }
-  }
+  def linesFrom(closed: Dataset[RingFragRow]): Dataset[LineRow] =
+    ContourEngine.reduceRings(closed, cfg) { (gid, t, rings) =>
+      LineRow(gid, t, rings.map(_.toSeq).toSeq)
+    }
 
   /** Raw rings in grid coordinates — the reference's `contour_rings`
     * (no smoothing or affine regardless of cfg).
     */
   def contourRings(tiles: Dataset[TileRow], maxTileCoordHint: Option[Int] = None): Dataset[RingsRow] = {
-    val raw = new ContourEngine(spark, cfg.copy(smooth = false,
-      xOrigin = 0, yOrigin = 0, xStep = 1, yStep = 1))
-    val closed = raw.closedOf(tiles, maxTileCoordHint)
-    val ts = thresholds
-    withPotentialKeys(closed, ts.length)
-      .groupByKey(r => (r.gridId, r.ti))
-      .mapGroups { (key: (String, Int), it: Iterator[RingFragRow]) =>
-        RingsRow(key._1, ts(key._2),
-          it.filter(_.pts.nonEmpty).toArray.sortBy(_.maxKey).map(_.pts.toSeq).toSeq)
-      }
+    val rawCfg = cfg.copy(smooth = false, xOrigin = 0, yOrigin = 0, xStep = 1, yStep = 1)
+    val closed = new ContourEngine(spark, rawCfg).closedOf(tiles, maxTileCoordHint)
+    ContourEngine.reduceRings(closed, rawCfg) { (gid, t, rings) =>
+      RingsRow(gid, t, rings.map(_.toSeq).toSeq)
+    }
   }
 
   /** Isobands — the reference's `isobands()` distributed: each threshold's
@@ -421,5 +310,97 @@ final class ContourEngine(spark: SparkSession, cfg: JobConfig,
       }
       (gid, feats.toSeq)
     }
+  }
+}
+
+object ContourEngine {
+
+  /** The kernel's view of a stored tile: its owned samples and cells, plus
+    * the virtual border cells (-1) of a tile on the grid's left/top edge.
+    */
+  def tileSpec(t: TileRow): Tiling.TileSpec =
+    Tiling.TileSpec(t.tileX, t.tileY, t.sx0, t.sy0, t.tw, t.th,
+      t.sx0, t.sy0, t.vw, t.vh,
+      if (t.sx0 == 0) -1 else t.sx0, t.sx0 + t.tw - 1,
+      if (t.sy0 == 0) -1 else t.sy0, t.sy0 + t.th - 1)
+
+  /** One tile's kernel output for every threshold index `ti`: closed rings
+    * (block (0, 0)) and open boundary fragments at the tile's own block
+    * (tileX, tileY).
+    */
+  def tileRows(t: TileRow, ts: Array[Double], smooth: Boolean): Iterator[RingFragRow] = {
+    val outs = Tiling.tileKernelMulti(t.values, tileSpec(t), t.gdx, t.gdy, ts, smooth)
+    ts.indices.iterator.flatMap { ti =>
+      val out = outs(ti)
+      out.rings.iterator.map(r =>
+        RingFragRow(t.gridId, ti, closed = true, 0, 0, 0L, 0L, r.maxKey, 0, r.pts)) ++
+        out.frags.iterator.map(f =>
+          RingFragRow(t.gridId, ti, closed = false, t.tileX, t.tileY,
+            f.startKey, f.endKey, f.maxKey, f.anchorPos, f.pts))
+    }
+  }
+
+  /** Stitch one group's open fragments: the rings that close (block
+    * (0, 0)) followed by the fragments still open, at block (bx, by).
+    * FragmentMerge is arrival-order independent, so any grouping of the
+    * same fragments yields the same rings.
+    */
+  def mergeRows(gid: String, ti: Int, bx: Int, by: Int,
+                open: Iterator[RingFragRow]): Array[RingFragRow] = {
+    val res = FragmentMerge.merge(
+      open.map(r => OpenFrag(r.pts, r.startKey, r.endKey, r.maxKey, r.anchorPos)).toSeq)
+    (res.rings.iterator.map(cr =>
+      RingFragRow(gid, ti, closed = true, 0, 0, 0L, 0L, cr.maxKey, 0, cr.pts)) ++
+      res.open.iterator.map(f =>
+        RingFragRow(gid, ti, closed = false, bx, by, f.startKey, f.endKey, f.maxKey, f.anchorPos, f.pts))
+    ).toArray
+  }
+
+  /** Merge rounds for tile coordinates up to `maxTileCoord`: one bit per
+    * round, but a single global round for <= 8x8 tiles per grid, where the
+    * hierarchy costs more sequential stages than it saves.
+    */
+  def mergeLevels(maxTileCoord: Int): Int =
+    if (maxTileCoord <= 7) 1
+    else math.max(1, 32 - Integer.numberOfLeadingZeros(math.max(1, maxTileCoord)))
+
+  /** Every (grid, ti in 0..n-1) group is guaranteed to exist in the
+    * assembly shuffle: real ring rows pass through, and each ti < 0 marker
+    * fans out to one synthetic EMPTY row per threshold index (empty pts —
+    * impossible for a real ring). The reducer skips the synthetics and so
+    * emits the reference's empty geometry for ring-less thresholds from
+    * the SAME shuffle — fully distributed backfill with zero extra stages
+    * (no driver collect, no distinct/except barrier).
+    */
+  private def withPotentialKeys(closed: Dataset[RingFragRow], nKeys: Int): Dataset[RingFragRow] = {
+    val spark = closed.sparkSession
+    import spark.implicits._
+    closed.flatMap { r =>
+      if (r.ti >= 0) Iterator.single(r)
+      else (0 until nKeys).iterator.map(ti =>
+        RingFragRow(r.gridId, ti, closed = true, 0, 0, 0L, 0L, Long.MinValue, 0, Array.empty))
+    }
+  }
+
+  /** The ring reducer shared by contours, lines and raw rings: per (grid,
+    * threshold) group, skip empty rows, sort by closure order, apply cfg's
+    * affine transform in place (unless identity), then `assemble`.
+    */
+  private def reduceRings[T: Encoder](closed: Dataset[RingFragRow], cfg: JobConfig)(
+      assemble: (String, Double, Array[Array[Double]]) => T): Dataset[T] = {
+    val spark = closed.sparkSession
+    import spark.implicits._
+    val ts = cfg.thresholds.toArray
+    val (xs, ys, xo, yo) = (cfg.xStep, cfg.yStep, cfg.xOrigin, cfg.yOrigin)
+    val ident = cfg.isIdentityAffine
+    withPotentialKeys(closed, ts.length)
+      .groupByKey(r => (r.gridId, r.ti))
+      .mapGroups { (key: (String, Int), it: Iterator[RingFragRow]) =>
+        val rings = it.filter(_.pts.nonEmpty).toArray.sortBy(_.maxKey).map { r =>
+          if (!ident) Assembly.applyAffine(r.pts, xs, ys, xo, yo)
+          r.pts
+        }
+        assemble(key._1, ts(key._2), rings)
+      }
   }
 }

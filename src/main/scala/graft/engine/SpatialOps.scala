@@ -411,11 +411,13 @@ object SpatialOps {
     * is then O(i) and a per-ring walk turns quadratic (a 50k-point ring
     * costs ~10^9 element hops; the r06 optimization round measured the
     * segment explode at 12s for this reason). Every indexed walk below
-    * converts to a primitive array first — O(n), one copy.
+    * converts to a primitive array first — O(n), one copy. Only a
+    * primitive-backed ArraySeq.ofDouble is read in place (callers never
+    * write to the result); any other Seq (a List, a boxed ArraySeq.ofRef)
+    * is copied element by element.
     */
-  @inline private def ringArr(ring: Seq[Double]): Array[Double] = ring match {
-    case w: scala.collection.mutable.WrappedArray[_] =>
-      w.array.asInstanceOf[Array[Double]]
+  @inline private[graft] def ringArr(ring: Seq[Double]): Array[Double] = ring match {
+    case w: scala.collection.immutable.ArraySeq.ofDouble => w.unsafeArray
     case _ => ring.toArray
   }
 

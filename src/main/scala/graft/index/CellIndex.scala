@@ -39,11 +39,6 @@ object CellIndex {
   /** Parent cell at level l (2^l x 2^l tiles per cell). */
   @inline def parent(key: Long, level: Int): Long = key >>> (2 * level)
 
-  /** Deterministic salt in [0, nSalts) for splitting a hot key. */
-  @inline def salt(key: Long, discriminator: Long, nSalts: Int): Int =
-    (java.lang.Long.hashCode(key * 0x9e3779b97f4a7c15L ^ discriminator)
-      & Int.MaxValue) % nSalts
-
   /** Column form of [[morton]] — the identical five-step bit-spread cascade
     * as `spread`, expressed over native bitwise Columns so hierarchical cell
     * keys are computed inside whole-stage codegen (no typed map, no UDF, in

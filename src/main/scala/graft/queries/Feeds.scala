@@ -71,11 +71,19 @@ object Feeds {
   /** A base parquet table as a shared feed when it is small enough to
     * decode once, else the raw scan. The spread to `defaultParallelism`
     * partitions also fixes the single-split serial-decode bottleneck for
-    * every consumer.
+    * every consumer. The size is probed through the path's Hadoop
+    * FileSystem, so a `file:`, `hdfs:` or object-store URI takes the same
+    * decision as a bare local path.
     */
   def table(spark: SparkSession, dir: String, file: String): DataFrame = {
-    val f = new java.io.File(s"$dir/$file")
-    if (f.isFile && f.length < TableFeedMaxBytes)
+    val path = new org.apache.hadoop.fs.Path(s"$dir/$file")
+    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
+    val small =
+      try {
+        val st = fs.getFileStatus(path)
+        st.isFile && st.getLen < TableFeedMaxBytes
+      } catch { case _: java.io.FileNotFoundException => false }
+    if (small)
       shared(spark, dir, "tbl_" + file.replaceAll("[^A-Za-z0-9]", "_")) {
         spark.read.parquet(s"$dir/$file")
           .repartition(math.max(8, spark.sparkContext.defaultParallelism))

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.core.{Assembly, FragmentMerge, OpenFrag, Tiling}
 import graft.docs.DocCodec
 import graft.engine.ContourEngine
 import graft.model._
@@ -59,9 +58,11 @@ object StreamingContour {
                              tileKeys: Seq[Long], open: Seq[RingFragRow])
 
   /** In emitted RingFragRow rows: ti >= 0 -> a closed ring of threshold
-    * index ti; ti == CompleteTi -> the grid completed this batch.
+    * index ti; ti == CompleteTi -> the grid completed this batch. It is the
+    * batch engine's ti = -1 tile marker, so completion assembly is
+    * ContourEngine.contoursFrom over the grid's rings plus this marker.
     */
-  val CompleteTi: Int = -2
+  val CompleteTi: Int = -1
 
   /** Stateful streaming contouring: a grid's tiles may arrive across ANY
     * number of micro-batches. flatMapGroupsWithState on gridId runs the
@@ -119,7 +120,7 @@ object StreamingContour {
           if (completed.nonEmpty) {
             val markers = rows.filter(r => r.ti == CompleteTi)
             val rings = readRingStore(s, ringStore, completed)
-            sink(assembleCompleted(s, rings.union(markers), cfg), batchId)
+            sink(new ContourEngine(s, cfg).contoursFrom(rings.union(markers)), batchId)
           }
         } finally rows.unpersist()
       }
@@ -128,10 +129,7 @@ object StreamingContour {
 
   /** The completed grids' persisted rings: only the `gid=` partition
     * directories of those grids, across the per-batch directories — the
-    * rest of the ring-store history is never touched. Legacy batch dirs
-    * (bare parquet written before the store was partitioned) are read
-    * whole; the row filter below keeps the result correct for them while
-    * being a no-op for pre-pruned partition dirs.
+    * rest of the ring-store history is never touched.
     */
   private[streaming] def readRingStore(spark: SparkSession, ringStore: String,
                                        grids: Set[String]): Dataset[RingFragRow] = {
@@ -142,55 +140,21 @@ object StreamingContour {
     if (dirs.isEmpty) spark.emptyDataset[RingFragRow]
     else spark.read.schema(org.apache.spark.sql.Encoders.product[RingFragRow].schema)
       .parquet(dirs: _*)
-      // a COLUMN predicate (not a typed closure): pushes down to the
-      // parquet reader so legacy whole-batch reads skip non-matching row
-      // groups by column stats instead of deserializing every pts array;
-      // a no-op for the pre-pruned partitioned dirs
-      .filter(col("gridId").isin(grids.toSeq: _*))
       .as[RingFragRow]
   }
 
   private def escGid(gid: String): String =
     org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(gid)
 
-  private val LegacyEof = "#eof"
-
   /** Record, in the per-grid directory index, which grids batch `batchId`
     * wrote rings for: one empty marker file `index/gid=<g>/b<batchId>` per
     * grid (same Hive-style escaping as partitionBy, so exotic grid ids
     * round-trip). IDEMPOTENT: a retried batch recreates the same markers.
-    * The FIRST indexing call on a store that already holds batch dirs
-    * (an engine upgrade on a live stream) records those pre-index batch
-    * names once in `index/_legacy_batches`, so reads never miss
-    * un-indexed history.
-    *
-    * CRASH SAFETY: index initialization is guarded by the legacy file's
-    * COMPLETENESS (a `#eof` trailer line), not by the index dir's
-    * existence — a crash after mkdirs but before/among the legacy-file
-    * bytes leaves a missing-or-torn file, and the replayed batch simply
-    * re-captures the pre-index list (the crashed attempt wrote no markers
-    * yet, so "all b* dirs except the current batch" is still exactly the
-    * un-indexed history). Readers treat a torn legacy file as
-    * "index not initialized" and fall back to the full walk — a correct
-    * superset — for the window until the retry repairs it.
     */
   private[streaming] def writeRingIndex(fs: org.apache.hadoop.fs.FileSystem,
                                         ringStore: String, batchId: Long,
                                         grids: Seq[String]): Unit = {
-    val root = new org.apache.hadoop.fs.Path(ringStore)
-    val indexDir = new org.apache.hadoop.fs.Path(root, "index")
-    val legacyFile = new org.apache.hadoop.fs.Path(indexDir, "_legacy_batches")
-    if (readLegacyBatches(fs, legacyFile).isEmpty) { // absent OR torn
-      val preexisting =
-        try fs.listStatus(root).filter(st => st.isDirectory &&
-            st.getPath.getName.startsWith("b") && st.getPath.getName != s"b$batchId")
-          .map(_.getPath.getName).sorted
-        catch { case _: java.io.FileNotFoundException => Array.empty[String] }
-      fs.mkdirs(indexDir)
-      val out = fs.create(legacyFile, true)
-      try out.write((preexisting :+ LegacyEof).mkString("\n").getBytes("UTF-8"))
-      finally out.close()
-    }
+    val indexDir = new org.apache.hadoop.fs.Path(new org.apache.hadoop.fs.Path(ringStore), "index")
     grids.sorted.foreach { g =>
       val gdir = new org.apache.hadoop.fs.Path(indexDir, s"gid=${escGid(g)}")
       fs.mkdirs(gdir)
@@ -198,108 +162,28 @@ object StreamingContour {
     }
   }
 
-  /** The pre-index batch names, iff the legacy file exists AND is complete
-    * (trailer present); None for absent or torn — callers treat both as
-    * "index not initialized".
-    */
-  private def readLegacyBatches(fs: org.apache.hadoop.fs.FileSystem,
-                                legacyFile: org.apache.hadoop.fs.Path): Option[Seq[String]] = {
-    if (!fs.exists(legacyFile)) return None
-    val lines = graft.lake.Lake.readFully(fs, legacyFile).split("\n", -1).toSeq
-    if (lines.lastOption.contains(LegacyEof)) Some(lines.dropRight(1).filter(_.nonEmpty))
-    else None
-  }
-
-  /** The directories holding `grids`' rings.
-    *
-    * Indexed store (any store this engine has written): each grid's marker
-    * dir lists exactly the batches holding its rings, so the walk is
-    * O(batches containing that grid) — one `listStatus` per grid plus one
-    * existence check per marker — regardless of how many batches the
-    * stream has accumulated. Batches from before the index existed (an
-    * upgraded live stream) were recorded once in `_legacy_batches` and are
-    * read whole (the row filter prunes them).
-    *
-    * Pre-index store (no `index/` dir at all): the original full walk —
-    * every batch's matching `gid=` partition dirs (partition values
-    * matched by UNESCAPING the dir name, the exact inverse of
-    * partitionBy's escaping), plus any whole batch dir in the
-    * pre-partitioning layout (bare parquet at the batch level), which
-    * readRingStore's row filter prunes.
+  /** The directories holding `grids`' rings: each grid's marker dir lists
+    * exactly the batches holding its rings, so the walk is O(batches
+    * containing that grid) — one `listStatus` per grid plus one existence
+    * check per marker — regardless of how many batches the stream has
+    * accumulated.
     */
   private[streaming] def ringDirsFor(fs: org.apache.hadoop.fs.FileSystem,
                                      ringStore: String,
                                      grids: Set[String]): Seq[String] = {
     val root = new org.apache.hadoop.fs.Path(ringStore)
     val indexDir = new org.apache.hadoop.fs.Path(root, "index")
-    readLegacyBatches(fs, new org.apache.hadoop.fs.Path(indexDir, "_legacy_batches")) match {
-      case Some(legacyNames) =>
-        val legacy = legacyNames
-          .flatMap(b => expandBatchDir(fs, new org.apache.hadoop.fs.Path(root, b), grids))
-        val indexed = grids.toSeq.sorted.flatMap { g =>
-          val e = escGid(g)
-          val markers =
-            try fs.listStatus(new org.apache.hadoop.fs.Path(indexDir, s"gid=$e"))
-              .map(_.getPath.getName).sorted.toSeq
-            catch { case _: java.io.FileNotFoundException => Nil }
-          markers.flatMap { b =>
-            val d = new org.apache.hadoop.fs.Path(new org.apache.hadoop.fs.Path(root, b), s"gid=$e")
-            // a batch retry may legitimately rewrite fewer grids than the
-            // failed attempt indexed — stale markers are skipped, not errors
-            if (fs.exists(d)) Some(d.toString) else None
-          }
-        }
-        legacy ++ indexed
-      case None => // no index, or a torn init — full walk is a correct superset
-        val batches =
-          try fs.listStatus(root)
-            .filter(st => st.isDirectory && st.getPath.getName != "index").map(_.getPath)
-          catch { case _: java.io.FileNotFoundException => Array.empty[org.apache.hadoop.fs.Path] }
-        batches.toIndexedSeq.flatMap(b => expandBatchDir(fs, b, grids))
-    }
-  }
-
-  /** One batch dir's read set for `grids`: the whole dir for the
-    * pre-partitioning layout (bare parquet at the batch level — the row
-    * filter prunes), else the matching `gid=` partition dirs.
-    */
-  private def expandBatchDir(fs: org.apache.hadoop.fs.FileSystem,
-                             b: org.apache.hadoop.fs.Path,
-                             grids: Set[String]): Seq[String] = {
-    val entries =
-      try fs.listStatus(b)
-      catch { case _: java.io.FileNotFoundException => return Nil }
-    val legacy = entries.exists(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-    if (legacy) Seq(b.toString)
-    else entries.iterator.filter(_.isDirectory).map(_.getPath)
-      .filter { d =>
-        val n = d.getName
-        n.startsWith("gid=") &&
-          grids.contains(org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-            .unescapePathName(n.drop(4)))
-      }
-      .map(_.toString).toSeq
-  }
-
-  /** Distributed per-grid assembly of completed grids — identical reducer
-    * semantics to ContourEngine.contoursFrom. The completion markers ride
-    * along so a grid with zero rings still emits its (empty) contour rows.
-    */
-  private def assembleCompleted(spark: SparkSession, rows: Dataset[RingFragRow],
-                                cfg: JobConfig): Dataset[ContourRow] = {
-    import spark.implicits._
-    val ts = cfg.thresholds.toArray
-    val (xs, ys, xo, yo) = (cfg.xStep, cfg.yStep, cfg.xOrigin, cfg.yOrigin)
-    val ident = cfg.isIdentityAffine
-    rows.groupByKey(_.gridId).flatMapGroups { (gid: String, it: Iterator[RingFragRow]) =>
-      val byTi = it.filter(_.ti >= 0).toArray.groupBy(_.ti)
-      ts.indices.iterator.map { ti =>
-        val rings = byTi.getOrElse(ti, Array.empty).sortBy(_.maxKey).map { r =>
-          if (!ident) Assembly.applyAffine(r.pts, xs, ys, xo, yo)
-          r.pts
-        }
-        val polys = Assembly.assembleContour(rings.toSeq)
-        ContourRow(gid, ts(ti), polys.map(p => PolyRow(p.exterior.toSeq, p.holes.map(_.toSeq))))
+    grids.toSeq.sorted.flatMap { g =>
+      val e = escGid(g)
+      val markers =
+        try fs.listStatus(new org.apache.hadoop.fs.Path(indexDir, s"gid=$e"))
+          .map(_.getPath.getName).sorted.toSeq
+        catch { case _: java.io.FileNotFoundException => Nil }
+      markers.flatMap { b =>
+        val d = new org.apache.hadoop.fs.Path(new org.apache.hadoop.fs.Path(root, b), s"gid=$e")
+        // a batch retry may legitimately rewrite fewer grids than the
+        // failed attempt indexed — stale markers are skipped, not errors
+        if (fs.exists(d)) Some(d.toString) else None
       }
     }
   }
@@ -331,18 +215,7 @@ object StreamingContour {
       if (covered > total)
         throw new IllegalStateException(
           s"grid $gid coverage overshoot: $covered > $total owned cells")
-      val spec = Tiling.TileSpec(t.tileX, t.tileY, t.sx0, t.sy0, t.tw, t.th,
-        t.sx0, t.sy0, t.vw, t.vh,
-        if (t.sx0 == 0) -1 else t.sx0, t.sx0 + t.tw - 1,
-        if (t.sy0 == 0) -1 else t.sy0, t.sy0 + t.th - 1)
-      val outs = Tiling.tileKernelMulti(t.values, spec, t.gdx, t.gdy, ts, cfg.smooth)
-      ts.indices.foreach { ti =>
-        outs(ti).rings.foreach(r =>
-          emit += RingFragRow(gid, ti, closed = true, 0, 0, 0L, 0L, r.maxKey, 0, r.pts))
-        outs(ti).frags.foreach(f =>
-          open += RingFragRow(gid, ti, closed = false, t.tileX, t.tileY,
-            f.startKey, f.endKey, f.maxKey, f.anchorPos, f.pts))
-      }
+      ContourEngine.tileRows(t, ts, cfg.smooth).foreach(r => if (r.closed) emit += r else open += r)
     }
     val done = total > 0 && covered == total
     // merge this batch's open fragments with the carried ones, per
@@ -350,13 +223,8 @@ object StreamingContour {
     // reopens a closed ring) and is emitted now, not carried
     val stillOpen = ArrayBuffer[RingFragRow]()
     open.groupBy(_.ti).foreach { case (ti, rows) =>
-      val res = FragmentMerge.merge(
-        rows.map(r => OpenFrag(r.pts, r.startKey, r.endKey, r.maxKey, r.anchorPos)).toSeq)
-      res.rings.foreach(r =>
-        emit += RingFragRow(gid, ti, closed = true, 0, 0, 0L, 0L, r.maxKey, 0, r.pts))
-      res.open.foreach(f =>
-        stillOpen += RingFragRow(gid, ti, closed = false, 0, 0,
-          f.startKey, f.endKey, f.maxKey, f.anchorPos, f.pts))
+      ContourEngine.mergeRows(gid, ti, 0, 0, rows.iterator)
+        .foreach(r => if (r.closed) emit += r else stillOpen += r)
     }
     if (!done) {
       state.update(GridState(covered, total, seen.toSeq, stillOpen.toSeq))

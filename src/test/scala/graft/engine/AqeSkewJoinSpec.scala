@@ -3,8 +3,7 @@ package graft.engine
 import graft.SparkTestSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Runtime skew handling — the AQE half of the skew story (SkewTools is
-  * the explicit-salting half): a join keyed on a pathologically hot key
+/** Runtime skew handling by AQE: a join keyed on a pathologically hot key
   * must be re-planned at runtime by AQE's skew-join rule (the hot
   * partition split into sub-partitions, the other side replicated) with
   * results identical to the logical join. The thresholds are lowered so

@@ -222,23 +222,6 @@ class ContourEngineSpec extends AnyFunSuite {
     assert(eng.trackedCacheCount == 0)
   }
 
-  test("salted final stitch is byte-identical (volcano isobands + contours)") {
-    val (data, w, h) = loadFixture("/fixtures/volcano.json")
-    val thresholds = (90 to 200 by 10).map(_.toDouble)
-    implicit val s = spark
-    val tiles = DocCodec.decode(DocCodec.encode(
-      GridSynth.tilesFromArray(spark, "gv", data, w, h, 8, 8)))
-    val plain = new ContourEngine(spark, JobConfig(thresholds, smooth = true))
-    val salted = new ContourEngine(spark, JobConfig(thresholds, smooth = true), stitchSalts = 4)
-    val a = plain.isobands(tiles).collect().sortBy(_.minV).toSeq
-    val b = salted.isobands(tiles).collect().sortBy(_.minV).toSeq
-    assert(a == b)
-    val ca = plain.contours(tiles).collect().sortBy(_.threshold).toSeq
-    val cb = salted.contours(tiles).collect().sortBy(_.threshold).toSeq
-    assert(ca == cb)
-    assert(ca.exists(_.polygons.nonEmpty))
-  }
-
   test("external blob-store codec: identical tiles and pipeline output") {
     implicit val s = spark
     val tiles = GridSynth.tilesFromArray(spark, "gx", multiHoleGrid, 10, 10, 4, 4)

@@ -726,4 +726,16 @@ class SpatialOpsSpec extends AnyFunSuite {
     // straight, and the CW hole's 4 corners all turn right
     assert(nv == 11L && nl == 5L && nr == 5L && ns == 1L)
   }
+
+  test("ringArr: a boxed ArraySeq ring and a List ring give the same primitive array") {
+    val pts = Array(0.5, 1.25, 3.0, -2.0, 0.5, 1.25)
+    // boxed elements: the backing Array[AnyRef] is no Array[Double]
+    val boxed = scala.collection.immutable.ArraySeq
+      .unsafeWrapArray(pts.map(d => java.lang.Double.valueOf(d): AnyRef))
+      .asInstanceOf[Seq[Double]]
+    val primitive = scala.collection.immutable.ArraySeq.unsafeWrapArray(pts)
+    assert(SpatialOps.ringArr(boxed).toSeq == pts.toSeq)
+    assert(SpatialOps.ringArr(pts.toList).toSeq == pts.toSeq)
+    assert(SpatialOps.ringArr(primitive) eq pts, "a primitive ring is read in place")
+  }
 }

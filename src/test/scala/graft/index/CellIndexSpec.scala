@@ -42,10 +42,4 @@ class CellIndexSpec extends AnyFunSuite {
       assert(k == CellIndex.morton(x, y), s"($x,$y)")
     }
   }
-
-  test("salt is deterministic and spread") {
-    val salts = (0 until 1000).map(i => CellIndex.salt(i.toLong, 7L, 8))
-    assert(salts.distinct.sorted == (0 until 8))
-    assert(salts == (0 until 1000).map(i => CellIndex.salt(i.toLong, 7L, 8)))
-  }
 }

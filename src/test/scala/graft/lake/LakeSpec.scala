@@ -202,33 +202,32 @@ class LakeSpec extends AnyFunSuite {
     assert(Lake.sweepOrphans(spark, table).isEmpty)
   }
 
-  test("checkpointed + salted + deep hierarchy: kill-resume is byte-identical") {
+  test("checkpointed + deep hierarchy: kill-resume is byte-identical") {
     import spark.implicits._
-    val table = Files.createTempDirectory("lake-salt").toString
+    val table = Files.createTempDirectory("lake-deep").toString
     val (data, w, h) = Goldens.loadFixture("/fixtures/volcano.json")
     val thresholds = (90 to 200 by 10).map(_.toDouble)
     val tiles = GridSynth.tilesFromArray(spark, "gs", data, w, h, 8, 8)
-    val plain = new ContourEngine(spark, JobConfig(thresholds, smooth = true))
-    val want = plain.contours(tiles).collect().sortBy(_.threshold).toSeq
+    val eng = new ContourEngine(spark, JobConfig(thresholds, smooth = true))
+    val want = eng.contours(tiles).collect().sortBy(_.threshold).toSeq
 
-    // salted + checkpointed: 87/8 -> tile coords to 10 -> levels 4, so the
-    // op chain is round-0..round-3, salt, round-4
-    val salted = new ContourEngine(spark, JobConfig(thresholds, smooth = true), stitchSalts = 4)
-    val closed1 = salted.closedRingsCheckpointed(tiles, table, maxTileCoord = 10)
-    val got1 = salted.contoursFrom(closed1).collect().sortBy(_.threshold).toSeq
+    // 87/8 -> tile coords to 10 -> levels 4, so the op chain is
+    // round-0..round-4
+    val closed1 = eng.closedRingsCheckpointed(tiles, table, maxTileCoord = 10)
+    val got1 = eng.contoursFrom(closed1).collect().sortBy(_.threshold).toSeq
     assert(got1 == want)
     val ops = Lake.snapshots(spark, table).map(_.op)
-    assert(ops == Seq("round-0", "round-1", "round-2", "round-3", "salt", "round-4"))
+    assert(ops == Seq("round-0", "round-1", "round-2", "round-3", "round-4"))
 
-    // kill after the salted round: drop the final manifest, resume with an
-    // EMPTY input — the engine must restore the salt snapshot and redo only
-    // the global round, byte-identical
+    // kill before the global round: drop the final manifest, resume with
+    // an EMPTY input — the engine must restore the round-3 snapshot and
+    // redo only the global round, byte-identical
     val dir = java.nio.file.Paths.get(table, "snapshots")
     val last = Files.list(dir).iterator().asScala.toSeq.sortBy(_.getFileName.toString).last
     Files.delete(last)
-    val closed2 = salted.closedRingsCheckpointed(
+    val closed2 = eng.closedRingsCheckpointed(
       spark.emptyDataset[graft.model.TileRow], table, maxTileCoord = 10)
-    val got2 = salted.contoursFrom(closed2).collect().sortBy(_.threshold).toSeq
+    val got2 = eng.contoursFrom(closed2).collect().sortBy(_.threshold).toSeq
     assert(got2 == want)
     assert(Lake.snapshots(spark, table).map(_.op).count(_ == "round-4") == 1)
   }

@@ -170,16 +170,11 @@ class StreamingContourSpec extends AnyFunSuite {
     assert(gpMarkers.nonEmpty)
     assert(gp.map(d => new org.apache.hadoop.fs.Path(d).getParent.getName).sorted.toSeq
       == gpMarkers, s"read set $gp must be exactly gP's indexed batches $gpMarkers")
-    // the init guard is the legacy file's COMPLETENESS: a fresh stream
-    // writes an empty-but-complete list (just the trailer)
-    assert(graft.lake.Lake.readFully(fs,
-      new org.apache.hadoop.fs.Path(indexDir, "_legacy_batches")) == "#eof",
-      "a fresh stream records an empty, complete pre-index history")
   }
 
-  test("torn ring-index init falls back to the full walk, then repairs on retry") {
+  test("ring index: retried markers are idempotent and stale markers are skipped") {
     import spark.implicits._
-    val store = Files.createTempDirectory("tornstore").toString
+    val store = Files.createTempDirectory("idxstore").toString
     def row(gid: String, ti: Int) =
       graft.model.RingFragRow(gid, ti, closed = true, 0, 0, 0L, 0L, ti.toLong, 0,
         Array(0.0, 0.0, 1.0, 0.0, 0.0, 1.0, 0.0, 0.0))
@@ -189,86 +184,17 @@ class StreamingContourSpec extends AnyFunSuite {
         .write.mode("overwrite").partitionBy("gid").parquet(s"$store/$batch")
     val fs = new org.apache.hadoop.fs.Path(store)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    // pre-index history + the first indexed batch whose init TORE: the
-    // index dir exists but _legacy_batches lacks the trailer
-    writePartitioned("b0", Seq(row("gP", 0)))
-    writePartitioned("b1", Seq(row("gP", 1)))
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$store/index"))
-    val torn = fs.create(new org.apache.hadoop.fs.Path(s"$store/index/_legacy_batches"), true)
-    try torn.write("b0".getBytes("UTF-8")) finally torn.close()
-    // reads in the torn window: the FULL WALK — every ring still visible
-    val got1 = StreamingContour.readRingStore(spark, store, Set("gP"))
-      .collect().map(_.ti).sorted.toSeq
-    assert(got1 == Seq(0, 1))
-    // the replayed batch repairs the init: b0 is re-captured as legacy
-    // (b1 is the replayed batch itself) and reads stay complete
-    StreamingContour.writeRingIndex(fs, store, 1L, Seq("gP"))
-    assert(graft.lake.Lake.readFully(fs,
-      new org.apache.hadoop.fs.Path(s"$store/index/_legacy_batches")) == "b0\n#eof")
-    val got2 = StreamingContour.readRingStore(spark, store, Set("gP"))
-      .collect().map(_.ti).sorted.toSeq
-    assert(got2 == Seq(0, 1))
-  }
-
-  test("ring index upgrade: pre-index batches recorded once, reads span all eras") {
-    import spark.implicits._
-    val store = Files.createTempDirectory("upstore").toString
-    def row(gid: String, ti: Int) =
-      graft.model.RingFragRow(gid, ti, closed = true, 0, 0, 0L, 0L, ti.toLong, 0,
-        Array(0.0, 0.0, 1.0, 0.0, 0.0, 1.0, 0.0, 0.0))
-    def writePartitioned(batch: String, rows: Seq[graft.model.RingFragRow]): Unit =
-      spark.createDataset(rows).toDF()
-        .withColumn("gid", org.apache.spark.sql.functions.col("gridId"))
-        .write.mode("overwrite").partitionBy("gid").parquet(s"$store/$batch")
-    // pre-index history: b0 partitioned, b1 bare-parquet legacy
     writePartitioned("b0", Seq(row("gP", 0), row("gQ", 1)))
-    spark.createDataset(Seq(row("gP", 5), row("gQ", 6))).coalesce(1)
-      .write.mode("overwrite").parquet(s"$store/b1")
-    val fs = new org.apache.hadoop.fs.Path(store)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    // the first indexed batch (an engine upgrade on a live stream)
-    writePartitioned("b2", Seq(row("gP", 2)))
-    StreamingContour.writeRingIndex(fs, store, 2L, Seq("gP"))
-    // ... and a later indexed batch for the OTHER grid only
-    writePartitioned("b3", Seq(row("gQ", 3)))
-    StreamingContour.writeRingIndex(fs, store, 3L, Seq("gQ"))
-    val dirs = StreamingContour.ringDirsFor(fs, store, Set("gP"))
-    assert(dirs.exists(_.endsWith("b0/gid=gP")) && dirs.exists(_.endsWith("b1"))
-      && dirs.exists(_.endsWith("b2/gid=gP")), s"got $dirs")
-    assert(!dirs.exists(_.contains("gid=gQ")) && !dirs.exists(_.contains("b3")),
-      s"gQ partitions / gQ-only batches must not be read: $dirs")
-    val got = StreamingContour.readRingStore(spark, store, Set("gP"))
-      .collect().map(r => (r.gridId, r.ti)).sorted.toSeq
-    assert(got == Seq(("gP", 0), ("gP", 2), ("gP", 5)))
-    // marker writes are idempotent (a retried batch recreates them), and a
-    // stale marker for a grid the retry didn't rewrite is skipped
-    StreamingContour.writeRingIndex(fs, store, 2L, Seq("gP", "gQ"))
-    writePartitioned("b2", Seq(row("gP", 2))) // retry rewrote only gP
-    val dirs2 = StreamingContour.ringDirsFor(fs, store, Set("gQ"))
-    assert(!dirs2.exists(_.endsWith("b2/gid=gQ")), s"stale marker must be skipped: $dirs2")
-    assert(dirs2.exists(_.endsWith("b3/gid=gQ")) && dirs2.exists(_.endsWith("b0/gid=gQ")))
-  }
-
-  test("ring store reads span mixed legacy (bare parquet) and partitioned batches") {
-    import spark.implicits._
-    val store = Files.createTempDirectory("mixstore").toString
-    def row(gid: String, ti: Int) =
-      graft.model.RingFragRow(gid, ti, closed = true, 0, 0, 0L, 0L, ti.toLong, 0,
-        Array(0.0, 0.0, 1.0, 0.0, 0.0, 1.0, 0.0, 0.0))
-    // b0: legacy layout — bare parquet, both grids mixed in the files
-    spark.createDataset(Seq(row("gP", 0), row("gQ", 1))).coalesce(1)
-      .write.mode("overwrite").parquet(s"$store/b0")
-    // b1: new layout — partitioned by gid
-    spark.createDataset(Seq(row("gP", 2), row("gQ", 3))).toDF()
-      .withColumn("gid", org.apache.spark.sql.functions.col("gridId"))
-      .write.mode("overwrite").partitionBy("gid").parquet(s"$store/b1")
-    val fs = new org.apache.hadoop.fs.Path(store)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    // the legacy batch is read whole; the new batch prunes to gP's partition
-    val dirs = StreamingContour.ringDirsFor(fs, store, Set("gP"))
-    assert(dirs.exists(_.endsWith("b0")) && dirs.exists(_.endsWith("gid=gP")))
-    assert(!dirs.exists(_.endsWith("gid=gQ")))
-    // and the row filter makes the result exactly gP's rings from BOTH eras
+    StreamingContour.writeRingIndex(fs, store, 0L, Seq("gP", "gQ"))
+    // a failed attempt of batch 1 indexed both grids, its retry rewrote
+    // only gP: gQ's marker for b1 is stale
+    StreamingContour.writeRingIndex(fs, store, 1L, Seq("gP", "gQ"))
+    writePartitioned("b1", Seq(row("gP", 2)))
+    StreamingContour.writeRingIndex(fs, store, 1L, Seq("gP"))
+    val dirsQ = StreamingContour.ringDirsFor(fs, store, Set("gQ"))
+    assert(dirsQ.length == 1 && dirsQ.head.endsWith("b0/gid=gQ"), s"got $dirsQ")
+    val dirsP = StreamingContour.ringDirsFor(fs, store, Set("gP"))
+    assert(dirsP.length == 2 && dirsP.forall(_.endsWith("gid=gP")), s"got $dirsP")
     val got = StreamingContour.readRingStore(spark, store, Set("gP"))
       .collect().map(r => (r.gridId, r.ti)).sorted.toSeq
     assert(got == Seq(("gP", 0), ("gP", 2)))
