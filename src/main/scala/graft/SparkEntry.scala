@@ -124,13 +124,9 @@ object SparkEntry {
     * sides and quantization happens per point (no float-order-dependent
     * sums cross the compare).
     */
-  private def ringChecksum(rings: Iterator[Seq[Double]]): (Long, Long, Long) = {
+  private def ringChecksum(rings: Iterator[Array[Double]]): (Long, Long, Long) = {
     var n = 0L; var qx = 0L; var qy = 0L
-    rings.foreach { ringSeq =>
-      // indexed access over a LINKED Seq (the encoder's post-shuffle /
-      // post-checkpoint representation) is O(i) per hop — walk a
-      // primitive array instead
-      val ring = graft.engine.SpatialOps.ringArr(ringSeq)
+    rings.foreach { ring =>
       // drop the closing duplicate — conditionally, because the reference's
       // band-ring dedup can remove it (wrap segment collapsed by smoothing);
       // value-wise the trailing point then equals the first anyway, so the
@@ -385,8 +381,7 @@ object SparkEntry {
           var n = 0L
           var mnx = Long.MaxValue; var mxx = Long.MinValue
           var mny = Long.MaxValue; var mxy = Long.MinValue
-          c.polygons.iterator.flatMap(p => (p.exterior +: p.holes).iterator).foreach { ringSeq =>
-            val ring = ringSeq.toArray // linked-Seq indexed access is O(i)
+          c.polygons.iterator.flatMap(p => (p.exterior +: p.holes).iterator).foreach { ring =>
             var i = 0
             val m = ring.length - 2 // closing duplicate
             while (i < m) {
@@ -490,8 +485,7 @@ object SparkEntry {
       engine(spark).contourRings(eventTilesF(spark, dir))
         .map { r =>
           var n = 0L; var sx = 0L; var sy = 0L; var sxy = 0L
-          r.rings.foreach { ringSeq =>
-            val ring = ringSeq.toArray // linked-Seq indexed access is O(i)
+          r.rings.foreach { ring =>
             val m = ring.length - 2 // drop the closing duplicate
             var i = 0
             while (i < m) {
@@ -524,9 +518,9 @@ object SparkEntry {
       val cts = smoothContours(spark, dir)
       cts.flatMap { c =>
         val feat = GeoJson.contourFeature(ContourResult(c.threshold,
-          c.polygons.map(p => Poly(p.exterior.toArray, p.holes.map(_.toArray)))))
+          c.polygons.map(p => Poly(p.exterior, p.holes))))
         GeoJson.parseFeatureRings(feat).map { ring =>
-          val (n, qx, qy) = ringChecksum(Iterator.single(ring.toSeq))
+          val (n, qx, qy) = ringChecksum(Iterator.single(ring))
           (c.threshold, n, qx, qy)
         }
       }.toDF("threshold", "n_points", "qx_sum", "qy_sum")

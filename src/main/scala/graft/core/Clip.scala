@@ -64,13 +64,13 @@ object Clip {
   }
 
   /** Open vertex list of a possibly-closed ring (drops the trailing
-    * closing duplicate iff present — band rings can arrive without one).
+    * closing duplicate iff present — band rings can arrive without one);
+    * an already open ring is returned as is, not copied.
     */
-  def openRing(ring: Seq[Double]): Array[Double] = {
-    val a = ring.toArray
-    val n = a.length
-    if (n >= 4 && a(0) == a(n - 2) && a(1) == a(n - 1))
-      java.util.Arrays.copyOf(a, n - 2)
-    else a
+  def openRing(ring: Array[Double]): Array[Double] = {
+    val n = ring.length
+    if (n >= 4 && ring(0) == ring(n - 2) && ring(1) == ring(n - 1))
+      java.util.Arrays.copyOf(ring, n - 2)
+    else ring
   }
 }

@@ -5,6 +5,7 @@ import graft.model._
 import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
+import scala.collection.immutable.ArraySeq
 import scala.collection.mutable.ArrayBuffer
 
 /** The distributed contour pipeline over typed Datasets:
@@ -36,7 +37,7 @@ final class ContourEngine(spark: SparkSession, cfg: JobConfig) {
   // Every dataset this engine persists. Intermediate merge rounds are
   // unpersisted as soon as the next round materializes (see
   // closedRingsImpl); the caches that back the RETURNED lazy Datasets
-  // (kernel output, final salted state) must live until the caller's
+  // (kernel output, last persisted merge round) must live until the caller's
   // action completes — callers release them afterwards via releaseCaches().
   private val tracked = ArrayBuffer[Dataset[_]]()
   private def track[T](d: Dataset[T]): Dataset[T] =
@@ -59,8 +60,9 @@ final class ContourEngine(spark: SparkSession, cfg: JobConfig) {
     * rings, open fragments, and one marker row per tile with ti = -1
     * (drives backfill of empty results).
     */
-  def kernelRows(tiles: Dataset[TileRow]): Dataset[RingFragRow] = {
-    val smooth = cfg.smooth
+  def kernelRows(tiles: Dataset[TileRow]): Dataset[RingFragRow] = kernelOf(tiles, cfg.smooth)
+
+  private def kernelOf(tiles: Dataset[TileRow], smooth: Boolean): Dataset[RingFragRow] = {
     val ts = thresholds
     tiles.flatMap { t =>
       Iterator.single(RingFragRow(t.gridId, -1, closed = true, t.tileX, t.tileY,
@@ -188,51 +190,46 @@ final class ContourEngine(spark: SparkSession, cfg: JobConfig) {
     * ti = -1 markers) of the input tiles.
     */
   def closedRingRows(tiles: Dataset[TileRow], hint: Option[Int] = None): Dataset[RingFragRow] =
-    closedOf(tiles, hint)
+    closedOf(tiles, hint, cfg.smooth)
 
   /** Persist+count the kernel output ONCE, then derive the round count from
     * the cached ti = -1 markers — the no-hint path must never evaluate the
-    * dominant decode+kernel stage twice.
+    * dominant decode+kernel stage twice. Every cache is tracked by this
+    * engine, so releaseCaches() drops it.
     */
-  private def closedOf(tiles: Dataset[TileRow], hint: Option[Int]): Dataset[RingFragRow] =
+  private def closedOf(tiles: Dataset[TileRow], hint: Option[Int],
+                       smooth: Boolean): Dataset[RingFragRow] =
     hint match {
-      case Some(m) => closedRings(kernelRows(tiles), m)
+      case Some(m) => closedRings(kernelOf(tiles, smooth), m)
       case None =>
-        val ko = track(kernelRows(tiles).persist(StorageLevel.MEMORY_AND_DISK))
+        val ko = track(kernelOf(tiles, smooth).persist(StorageLevel.MEMORY_AND_DISK))
         ko.count()
         closedRingsImpl(ko, maxTileCoordOf(ko), prePersisted = true)
     }
 
   /** Contour polygons — the reference's `contours()` distributed. */
   def contours(tiles: Dataset[TileRow], maxTileCoordHint: Option[Int] = None): Dataset[ContourRow] =
-    contoursFrom(closedOf(tiles, maxTileCoordHint))
+    contoursFrom(closedOf(tiles, maxTileCoordHint, cfg.smooth))
 
   /** Assembly from closed rings + ti = -1 markers (post-merge state). */
   def contoursFrom(closed: Dataset[RingFragRow]): Dataset[ContourRow] =
     ContourEngine.reduceRings(closed, cfg) { (gid, t, rings) =>
-      val polys = Assembly.assembleContour(rings.toSeq)
-      ContourRow(gid, t, polys.map(p => PolyRow(p.exterior.toSeq, p.holes.map(_.toSeq))))
+      ContourRow(gid, t, Assembly.assembleContour(rings).map(p => PolyRow(p.exterior, p.holes)))
     }
 
   /** Isolines — the reference's `lines()` distributed. */
   def lines(tiles: Dataset[TileRow], maxTileCoordHint: Option[Int] = None): Dataset[LineRow] =
-    linesFrom(closedOf(tiles, maxTileCoordHint))
+    linesFrom(closedOf(tiles, maxTileCoordHint, cfg.smooth))
 
   def linesFrom(closed: Dataset[RingFragRow]): Dataset[LineRow] =
-    ContourEngine.reduceRings(closed, cfg) { (gid, t, rings) =>
-      LineRow(gid, t, rings.map(_.toSeq).toSeq)
-    }
+    ContourEngine.reduceRings(closed, cfg)(LineRow)
 
   /** Raw rings in grid coordinates — the reference's `contour_rings`
     * (no smoothing or affine regardless of cfg).
     */
-  def contourRings(tiles: Dataset[TileRow], maxTileCoordHint: Option[Int] = None): Dataset[RingsRow] = {
-    val rawCfg = cfg.copy(smooth = false, xOrigin = 0, yOrigin = 0, xStep = 1, yStep = 1)
-    val closed = new ContourEngine(spark, rawCfg).closedOf(tiles, maxTileCoordHint)
-    ContourEngine.reduceRings(closed, rawCfg) { (gid, t, rings) =>
-      RingsRow(gid, t, rings.map(_.toSeq).toSeq)
-    }
-  }
+  def contourRings(tiles: Dataset[TileRow], maxTileCoordHint: Option[Int] = None): Dataset[RingsRow] =
+    ContourEngine.reduceRings(closedOf(tiles, maxTileCoordHint, smooth = false),
+      JobConfig(cfg.thresholds, smooth = false))(RingsRow)
 
   /** Isobands — the reference's `isobands()` distributed: each threshold's
     * rings are computed once and feed both adjacent bands (as upper/lower);
@@ -240,7 +237,7 @@ final class ContourEngine(spark: SparkSession, cfg: JobConfig) {
     */
   def isobands(tiles: Dataset[TileRow], maxTileCoordHint: Option[Int] = None): Dataset[BandRow] = {
     require(thresholds.length >= 2, "Unexpected: isobands needs >= 2 thresholds")
-    isobandsFrom(closedOf(tiles, maxTileCoordHint))
+    isobandsFrom(closedOf(tiles, maxTileCoordHint, cfg.smooth))
   }
 
   def isobandsFrom(closed: Dataset[RingFragRow]): Dataset[BandRow] = {
@@ -294,7 +291,7 @@ final class ContourEngine(spark: SparkSession, cfg: JobConfig) {
         (bLo until bHi).iterator.map { b =>
           val rings = ringsByTi(b - bLo) ++ ringsByTi(b + 1 - bLo)
           BandRow(gid, ts(b), ts(b + 1),
-            Assembly.assembleBand(rings).map(p => PolyRow(p.exterior.toSeq, p.holes.map(_.toSeq))))
+            Assembly.assembleBand(rings).map(p => PolyRow(p.exterior, p.holes)))
         }
       }
   }
@@ -306,7 +303,7 @@ final class ContourEngine(spark: SparkSession, cfg: JobConfig) {
     contours.groupByKey(_.gridId).mapGroups { (gid: String, it: Iterator[ContourRow]) =>
       val feats = it.toArray.sortBy(_.threshold).map { c =>
         GeoJson.contourFeature(ContourResult(c.threshold,
-          c.polygons.map(p => Poly(p.exterior.toArray, p.holes.map(_.toArray)))))
+          c.polygons.map(p => Poly(p.exterior, p.holes))))
       }
       (gid, feats.toSeq)
     }
@@ -387,7 +384,7 @@ object ContourEngine {
     * affine transform in place (unless identity), then `assemble`.
     */
   private def reduceRings[T: Encoder](closed: Dataset[RingFragRow], cfg: JobConfig)(
-      assemble: (String, Double, Array[Array[Double]]) => T): Dataset[T] = {
+      assemble: (String, Double, Seq[Array[Double]]) => T): Dataset[T] = {
     val spark = closed.sparkSession
     import spark.implicits._
     val ts = cfg.thresholds.toArray
@@ -400,7 +397,7 @@ object ContourEngine {
           if (!ident) Assembly.applyAffine(r.pts, xs, ys, xo, yo)
           r.pts
         }
-        assemble(key._1, ts(key._2), rings)
+        assemble(key._1, ts(key._2), ArraySeq.unsafeWrapArray(rings))
       }
   }
 }

@@ -1,6 +1,6 @@
 package graft.engine
 
-import graft.core.RingIndex
+import graft.core.{Clip, RingIndex}
 import graft.model.ContourRow
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -20,26 +20,19 @@ object SpatialOps {
   /** For each (id, x, y) point and each threshold: inside = odd number of
     * containing rings of that threshold's MultiPolygon. Points on a ring
     * boundary count as not-inside-nor-outside (verdict 0) and are excluded
-    * from the odd count, matching the reference's ring_contains.
+    * from the odd count, matching the reference's ring_contains. Rings
+    * are tested without their closing point (Clip.openRing): the
+    * reference's ring_contains scans the degenerate wrap segment (first ==
+    * last), which marks the whole horizontal line through the ring's first
+    * vertex as "on boundary" — harmless for the reference's hole walk,
+    * wrong for point tagging.
     */
-  /** Drop the duplicated closing point: the reference's ring_contains scans
-    * the degenerate wrap segment (first == last), which marks the whole
-    * horizontal line through the ring's first vertex as "on boundary" —
-    * harmless for the reference's hole walk, wrong for point tagging.
-    */
-  private def dropClosing(ring: Array[Double]): Array[Double] =
-    if (ring.length >= 4 &&
-        ring(0) == ring(ring.length - 2) && ring(1) == ring(ring.length - 1))
-      java.util.Arrays.copyOf(ring, ring.length - 2)
-    else ring
-
   def pipTag(spark: SparkSession, points: Dataset[(Long, Double, Double)],
              contours: Dataset[ContourRow]): DataFrame = {
     import spark.implicits._
     // polygons are the small side: collect + broadcast
     val polys: Array[(Double, Array[Array[Double]])] = contours.collect().map { c =>
-      (c.threshold, c.polygons.flatMap(p => p.exterior.toArray +: p.holes.map(_.toArray))
-        .map(dropClosing).toArray)
+      (c.threshold, c.polygons.flatMap(p => p.exterior +: p.holes).map(Clip.openRing).toArray)
     }
     val bc = spark.sparkContext.broadcast(polys)
     points.mapPartitions { it =>
@@ -78,8 +71,8 @@ object SpatialOps {
     // (current, previous) roles so the crossing division is bit-identical
     val segs = contours.flatMap { c =>
       val rings = c.polygons.iterator.flatMap(p => Iterator.single(p.exterior) ++ p.holes.iterator)
-      rings.zipWithIndex.flatMap { case (ringSeq, ri) =>
-        val ring = dropClosing(ringSeq.toArray)
+      rings.zipWithIndex.flatMap { case (closedRing, ri) =>
+        val ring = Clip.openRing(closedRing)
         val n = ring.length / 2
         val rid = s"${c.gridId}:${c.threshold}:$ri"
         (0 until n).iterator.flatMap { i =>
@@ -322,8 +315,7 @@ object SpatialOps {
                     thresholds: Seq[Double]): DataFrame = {
     import spark.implicits._
     val verts = contours.flatMap { c =>
-      c.polygons.iterator.flatMap(p => (p.exterior +: p.holes).iterator).flatMap { ringSeq =>
-        val ring = ringArr(ringSeq)
+      c.polygons.iterator.flatMap(p => (p.exterior +: p.holes).iterator).flatMap { ring =>
         val n = ring.length / 2 - 1
         (0 until n).iterator.map(i => (c.threshold, ring(2 * i), ring(2 * i + 1)))
       }
@@ -364,8 +356,7 @@ object SpatialOps {
                     thresholds: Seq[Double], eps2q: Long): DataFrame = {
     import spark.implicits._
     val verts = contours.flatMap { c =>
-      c.polygons.iterator.flatMap(p => (p.exterior +: p.holes).iterator).flatMap { ringSeq =>
-        val ring = ringArr(ringSeq)
+      c.polygons.iterator.flatMap(p => (p.exterior +: p.holes).iterator).flatMap { ring =>
         val n = ring.length / 2 - 1 // closing duplicate dropped; neighbours cyclic
         (0 until n).iterator.map { i =>
           val ip = (i + n - 1) % n; val in = (i + 1) % n
@@ -397,28 +388,12 @@ object SpatialOps {
     import contours.sparkSession.implicits._
     contours.map { c =>
       graft.model.ContourRow(c.gridId, c.threshold, c.polygons.flatMap { p =>
-        val ext = graft.core.Simplify.ring(p.exterior.toArray, eps)
+        val ext = graft.core.Simplify.ring(p.exterior, eps)
         if (ext.length < 8) None // fewer than 3 distinct vertices + close
-        else Some(graft.model.PolyRow(ext.toSeq,
-          p.holes.map(h => graft.core.Simplify.ring(h.toArray, eps))
-            .filter(_.length >= 8).map(_.toSeq)))
+        else Some(graft.model.PolyRow(ext,
+          p.holes.map(h => graft.core.Simplify.ring(h, eps)).filter(_.length >= 8)))
       })
     }
-  }
-
-  /** Rings deserialized from a checkpointed/exchanged ContourRow frame
-    * arrive as LINKED Seqs (List) in Scala 2.13 — indexed `ring(i)` access
-    * is then O(i) and a per-ring walk turns quadratic (a 50k-point ring
-    * costs ~10^9 element hops; the r06 optimization round measured the
-    * segment explode at 12s for this reason). Every indexed walk below
-    * converts to a primitive array first — O(n), one copy. Only a
-    * primitive-backed ArraySeq.ofDouble is read in place (callers never
-    * write to the result); any other Seq (a List, a boxed ArraySeq.ofRef)
-    * is copied element by element.
-    */
-  @inline private[graft] def ringArr(ring: Seq[Double]): Array[Double] = ring match {
-    case w: scala.collection.immutable.ArraySeq.ofDouble => w.unsafeArray
-    case _ => ring.toArray
   }
 
   /** Every directed edge (a -> b) of every ring (exteriors + holes) of a
@@ -429,8 +404,7 @@ object SpatialOps {
     * independently).
     */
   private def ringEdges(c: ContourRow): Iterator[(Double, Double, Double, Double)] =
-    c.polygons.iterator.flatMap(p => (p.exterior +: p.holes).iterator).flatMap { ringSeq =>
-      val ring = ringArr(ringSeq)
+    c.polygons.iterator.flatMap(p => (p.exterior +: p.holes).iterator).flatMap { ring =>
       (0 until ring.length / 2 - 1).iterator.map { i =>
         (ring(2 * i), ring(2 * i + 1), ring(2 * i + 2), ring(2 * i + 3))
       }
@@ -529,8 +503,7 @@ object SpatialOps {
   def contourVertices(spark: SparkSession, contours: Dataset[ContourRow]): DataFrame = {
     import spark.implicits._
     contours.flatMap { c =>
-      c.polygons.iterator.flatMap(p => (p.exterior +: p.holes).iterator).flatMap { ringSeq =>
-        val ring = ringArr(ringSeq)
+      c.polygons.iterator.flatMap(p => (p.exterior +: p.holes).iterator).flatMap { ring =>
         // drop the closing duplicate point
         (0 until ring.length / 2 - 1).iterator.map(i => (c.threshold, ring(2 * i), ring(2 * i + 1)))
       }
@@ -917,8 +890,7 @@ object SpatialOps {
     import spark.implicits._
     // kind 0 = ring representative (x1=px, y1=py); kind 1 = directed edge
     val tagged = rings.flatMap { rr =>
-      rr.rings.iterator.flatMap { ring =>
-        val a = ring.toArray
+      rr.rings.iterator.flatMap { a =>
         val n = a.length / 2 - 1 // closing duplicate dropped
         var kx = a(0); var ky = a(1)
         var i = 1
@@ -1073,8 +1045,7 @@ object SpatialOps {
                     thresholds: Seq[Double]): DataFrame = {
     import spark.implicits._
     val t = contours.flatMap { c =>
-      c.polygons.iterator.flatMap(p => (p.exterior +: p.holes).iterator).flatMap { ringSeq =>
-        val ring = ringArr(ringSeq)
+      c.polygons.iterator.flatMap(p => (p.exterior +: p.holes).iterator).flatMap { ring =>
         val n = ring.length / 2 - 1 // closing duplicate dropped; cyclic
         (0 until n).iterator.map { i =>
           val ip = (i + n - 1) % n; val in = (i + 1) % n

@@ -29,12 +29,26 @@ final case class RingFragRow(gridId: String, ti: Int, closed: Boolean,
                              maxKey: Long, anchorPos: Int,
                              pts: Array[Double])
 
-final case class PolyRow(exterior: Seq[Double], holes: Seq[Seq[Double]])
+/** Output rows. A ring is a primitive `Array[Double]` of interleaved x, y
+  * (Catalyst `array<double>`, the same field types as `core.Poly`); arrays
+  * compare by reference, so compare rings with `sameElements`/`toSeq`,
+  * never `==`. No code writes into a ring once it is in a row: isobands
+  * hand the same array to two adjacent bands.
+  */
+final case class PolyRow(exterior: Array[Double], holes: Seq[Array[Double]]) {
+  /** Written out instead of the synthesized copy so that an exterior
+    * rebuilt as a `Seq` is accepted too (perfbench's self-test perturbs
+    * rings that way); the new exterior is copied into a fresh array.
+    */
+  def copy(exterior: scala.collection.Seq[Double] = this.exterior,
+           holes: Seq[Array[Double]] = this.holes): PolyRow =
+    PolyRow(exterior.toArray, holes)
+}
 
 final case class ContourRow(gridId: String, threshold: Double, polygons: Seq[PolyRow])
-final case class LineRow(gridId: String, threshold: Double, lines: Seq[Seq[Double]])
+final case class LineRow(gridId: String, threshold: Double, lines: Seq[Array[Double]])
 final case class BandRow(gridId: String, minV: Double, maxV: Double, polygons: Seq[PolyRow])
-final case class RingsRow(gridId: String, threshold: Double, rings: Seq[Seq[Double]])
+final case class RingsRow(gridId: String, threshold: Double, rings: Seq[Array[Double]])
 
 /** Job configuration: thresholds + the reference ContourBuilder knobs. */
 final case class JobConfig(thresholds: Seq[Double], smooth: Boolean,

@@ -15,6 +15,13 @@ import scala.collection.mutable.ArrayBuffer
   * exactly-once sink semantics against the checkpoint, and each batch's
   * grids are independent (a grid's tiles are expected to land atomically,
   * which the lake's snapshot commit guarantees).
+  *
+  * Neither entry point changes the caller's session. The doc source reads
+  * with that session's `spark.sql.parquet.columnarReaderBatchSize` for the
+  * whole life of the stream (Spark's file stream source keeps the session
+  * it was defined on, not the query's clone): doc rows carry MB-scale
+  * media_ref strings, so set it to 32-64 as graft.Bench does — the default
+  * 4096-row batch can overflow the 2GB column vector.
   */
 object StreamingContour {
 
@@ -27,9 +34,6 @@ object StreamingContour {
   def start(spark: SparkSession, inputPath: String, checkpointDir: String,
             cfg: JobConfig)(sink: (Dataset[ContourRow], Long) => Unit): StreamingQuery = {
     import spark.implicits._
-    // doc rows carry MB-scale media_ref strings; the default 4096-row
-    // vectorized reader batch can overflow the 2GB column vector
-    spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "32")
     spark.readStream
       .schema(docSchema)
       .parquet(inputPath)
@@ -80,7 +84,6 @@ object StreamingContour {
   def startStateful(spark: SparkSession, inputPath: String, checkpointDir: String,
                     cfg: JobConfig)(sink: (Dataset[ContourRow], Long) => Unit): StreamingQuery = {
     import spark.implicits._
-    spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "32")
     val ringStore = s"$checkpointDir/rings"
     val emitted = spark.readStream
       .schema(docSchema)

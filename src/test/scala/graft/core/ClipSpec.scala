@@ -53,8 +53,8 @@ class ClipSpec extends AnyFunSuite {
   }
 
   test("openRing drops the closing duplicate only when present") {
-    assert(Clip.openRing(Seq(1.0, 2.0, 3.0, 4.0, 1.0, 2.0)).toSeq == Seq(1.0, 2.0, 3.0, 4.0))
-    assert(Clip.openRing(Seq(1.0, 2.0, 3.0, 4.0)).toSeq == Seq(1.0, 2.0, 3.0, 4.0))
+    assert(Clip.openRing(Array(1.0, 2.0, 3.0, 4.0, 1.0, 2.0)).toSeq == Seq(1.0, 2.0, 3.0, 4.0))
+    assert(Clip.openRing(Array(1.0, 2.0, 3.0, 4.0)).toSeq == Seq(1.0, 2.0, 3.0, 4.0))
   }
 
   test("random polygons: outputs stay in the box, area never grows") {

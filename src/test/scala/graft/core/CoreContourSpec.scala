@@ -9,9 +9,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class CoreContourSpec extends AnyFunSuite {
   import Goldens._
 
-  private def assertRing(got: Array[Double], want: Array[Double], hint: String = ""): Unit =
-    assert(got.toSeq == want.toSeq, s"$hint got=${got.grouped(2).map(_.mkString("(", ",", ")")).mkString} want=${want.grouped(2).map(_.mkString("(", ",", ")")).mkString}")
-
   test("test_empty_polygons") {
     val c = new CoreContour(ContourConfig(10, 10, smooth = true))
     val res = c.contours(zeros10x10, Array(0.5))

@@ -1,5 +1,8 @@
 package graft.core
 
+import graft.model.{ContourRow, PolyRow}
+import org.scalatest.Assertions.{assert, fail}
+
 /** The reference's 12 golden test inputs and expected geometries, ported
   * verbatim from /root/reference/src/lib.rs:84-744 (grids and expected
   * coordinates are data, re-expressed as Scala arrays). Shared by the pure
@@ -246,5 +249,40 @@ object Goldens {
     val dataStr = text.substring(text.indexOf("[") + 1, text.indexOf("]"))
     val data = dataStr.split(",").map(t => serdeJsonParseDouble(t))
     (data, width, height)
+  }
+
+  private def pts(r: Array[Double]): String =
+    r.grouped(2).map(_.mkString("(", ",", ")")).mkString
+
+  /** Exact ring equality by value: order, rotation and closing point. Rings
+    * are primitive arrays, whose `==` compares references.
+    */
+  def assertRing(got: Array[Double], want: Array[Double], hint: String = ""): Unit =
+    if (!got.sameElements(want)) fail(s"$hint got=${pts(got)} want=${pts(want)}")
+
+  /** Exact polygon-list equality: the same polygons in order, each exterior
+    * and hole equal by value (assertRing).
+    */
+  def assertPolys(got: Seq[PolyRow], want: Seq[Poly], hint: String = ""): Unit = {
+    assert(got.length == want.length, s"$hint: ${got.length} polygons, want ${want.length}")
+    got.zip(want).zipWithIndex.foreach { case ((g, w), i) =>
+      assertRing(g.exterior, w.exterior, s"$hint poly $i exterior")
+      assert(g.holes.length == w.holes.length,
+        s"$hint poly $i: ${g.holes.length} holes, want ${w.holes.length}")
+      g.holes.zip(w.holes).zipWithIndex.foreach { case ((gh, wh), j) =>
+        assertRing(gh, wh, s"$hint poly $i hole $j")
+      }
+    }
+  }
+
+  /** Exact contour-row equality: the same (grid, threshold) rows in order,
+    * polygons compared by assertPolys.
+    */
+  def assertContours(got: Seq[ContourRow], want: Seq[ContourRow], hint: String = ""): Unit = {
+    assert(got.map(c => (c.gridId, c.threshold)) == want.map(c => (c.gridId, c.threshold)), hint)
+    got.zip(want).foreach { case (g, w) =>
+      assertPolys(g.polygons, w.polygons.map(p => Poly(p.exterior, p.holes)),
+        s"$hint ${g.gridId} t=${g.threshold}")
+    }
   }
 }

@@ -18,7 +18,7 @@ class SimplifySpec extends AnyFunSuite {
     val tiles = GridSynth.tilesFromArray(spark, "dp", data, w, h, 16, 16)
     new ContourEngine(spark, JobConfig(Seq(110.0, 150.0), smooth = true))
       .contours(tiles).collect()
-      .flatMap(c => c.polygons.flatMap(p => p.exterior +: p.holes)).map(_.toArray).toSeq
+      .flatMap(c => c.polygons.flatMap(p => p.exterior +: p.holes)).toSeq
   }
 
   private def distSqTo(ring: Array[Double], px: Double, py: Double): Double = {
@@ -96,15 +96,12 @@ class SimplifySpec extends AnyFunSuite {
       .sortBy(_.threshold)
     val want = cts.collect().sortBy(_.threshold).map { c =>
       c.polygons.flatMap { p =>
-        val ext = Simplify.ring(p.exterior.toArray, eps)
+        val ext = Simplify.ring(p.exterior, eps)
         if (ext.length < 8) None
-        else Some((ext.toSeq, p.holes.map(hh => Simplify.ring(hh.toArray, eps))
-          .filter(_.length >= 8).map(_.toSeq)))
+        else Some(Poly(ext, p.holes.map(hh => Simplify.ring(hh, eps)).filter(_.length >= 8)))
       }
     }
-    got.zip(want).foreach { case (g, w0) =>
-      assert(g.polygons.map(p => (p.exterior, p.holes)) == w0)
-    }
+    got.zip(want).foreach { case (g, w0) => Goldens.assertPolys(g.polygons, w0, s"t=${g.threshold}") }
     assert(got.exists(_.polygons.nonEmpty))
   }
 }

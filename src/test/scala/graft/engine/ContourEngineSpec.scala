@@ -35,9 +35,6 @@ class ContourEngineSpec extends AnyFunSuite {
     eng.contours(tilesFor(values, 10, 10, tw, th)).collect().toSeq.sortBy(_.threshold)
   }
 
-  private def assertRing(got: Seq[Double], want: Array[Double], hint: String): Unit =
-    assert(got == want.toSeq, s"$hint")
-
   test("empty polygons + empty isoline through pipeline (all tilings)") {
     for ((tw, th) <- tilings) {
       val rows = contoursFor(zeros10x10, Seq(0.5), smooth = true, tw, th)
@@ -135,11 +132,7 @@ class ContourEngineSpec extends AnyFunSuite {
     assert(got.length == want.length)
     got.zip(want).foreach { case (g, w0) =>
       assert(g.minV == w0.minV && g.maxV == w0.maxV)
-      assert(g.polygons.length == w0.polygons.length, s"band ${g.minV}")
-      g.polygons.zip(w0.polygons).zipWithIndex.foreach { case ((gp, wp), i) =>
-        assert(gp.exterior == wp.exterior.toSeq, s"band ${g.minV} poly $i ext")
-        assert(gp.holes.map(_.toSeq) == wp.holes.map(_.toSeq), s"band ${g.minV} poly $i holes")
-      }
+      assertPolys(g.polygons, w0.polygons, s"band ${g.minV}")
     }
   }
 
@@ -149,6 +142,15 @@ class ContourEngineSpec extends AnyFunSuite {
     assert(rows.head.rings.length == 1)
     // raw = unsmoothed: vertices are half-integer multiples
     assert(rows.head.rings.head.forall(v => v * 2 == math.round(v * 2).toDouble))
+  }
+
+  test("contour_rings: releaseCaches drops the kernel cache it persisted") {
+    spark.catalog.clearCache() // start from an empty cache manager
+    val eng = new ContourEngine(spark, JobConfig(Seq(0.5), smooth = true))
+    // no hint: the kernel output is persisted to derive the round count
+    eng.contourRings(tilesFor(simpleGrid, 10, 10, 5, 5)).collect()
+    eng.releaseCaches()
+    assert(spark.sharedState.cacheManager.isEmpty, "a cache outlived releaseCaches()")
   }
 
   test("span-sequence invariant: appended GeoJSON spans preserve prefix") {
@@ -175,10 +177,7 @@ class ContourEngineSpec extends AnyFunSuite {
       val tiles = DocCodec.decode(DocCodec.encode(
         GridSynth.tilesFromArray(spark, s"g$dx-$dy", vals, dx, dy, math.max(1, dx / 2), math.max(1, dy / 2))))
       val got = eng.contours(tiles).collect().head
-      assert(got.polygons.length == want.polygons.length, s"dims ${dx}x$dy")
-      got.polygons.zip(want.polygons).foreach { case (g, w) =>
-        assert(g.exterior == w.exterior.toSeq, s"dims ${dx}x$dy")
-      }
+      assertPolys(got.polygons, want.polygons, s"dims ${dx}x$dy")
     }
   }
 
@@ -197,11 +196,7 @@ class ContourEngineSpec extends AnyFunSuite {
     assert(got.length == want.length)
     got.zip(want).foreach { case (g, w0) =>
       assert(g.threshold == w0.threshold)
-      assert(g.polygons.length == w0.polygons.length, s"t=${g.threshold}")
-      g.polygons.zip(w0.polygons).foreach { case (gp, wp) =>
-        assert(gp.exterior == wp.exterior.toSeq, s"t=${g.threshold}")
-        assert(gp.holes.map(_.toSeq) == wp.holes.map(_.toSeq), s"t=${g.threshold}")
-      }
+      assertPolys(g.polygons, w0.polygons, s"t=${g.threshold}")
     }
   }
 

@@ -38,11 +38,7 @@ class PotPopFrSpec extends AnyFunSuite {
     var totalPolys = 0
     got.zip(want).foreach { case (g, w0) =>
       assert(g.minV == w0.minV && g.maxV == w0.maxV)
-      assert(g.polygons.length == w0.polygons.length, s"band ${g.minV}")
-      g.polygons.zip(w0.polygons).zipWithIndex.foreach { case ((gp, wp), i) =>
-        assert(gp.exterior == wp.exterior.toSeq, s"band ${g.minV} poly $i")
-        assert(gp.holes.map(_.toSeq) == wp.holes.map(_.toSeq), s"band ${g.minV} poly $i holes")
-      }
+      Goldens.assertPolys(g.polygons, w0.polygons, s"band ${g.minV}")
       totalPolys += g.polygons.length
     }
     assert(totalPolys > 0)
@@ -58,11 +54,7 @@ class PotPopFrSpec extends AnyFunSuite {
     val eng = new ContourEngine(spark, JobConfig(ts, smooth = true, xo, yo, xs, ys))
     val got = eng.contours(tiles).collect().sortBy(_.threshold)
     got.zip(want).foreach { case (g, w0) =>
-      assert(g.polygons.length == w0.polygons.length, s"t=${g.threshold}")
-      g.polygons.zip(w0.polygons).foreach { case (gp, wp) =>
-        assert(gp.exterior == wp.exterior.toSeq)
-        assert(gp.holes.map(_.toSeq) == wp.holes.map(_.toSeq))
-      }
+      Goldens.assertPolys(g.polygons, w0.polygons, s"t=${g.threshold}")
     }
   }
 }

@@ -71,11 +71,11 @@ class SpatialOpsSpec extends AnyFunSuite {
     // |cy-ay| = 1: cross = dx*1 = eps/2 < EPSILON -> genuinely claimed
     // (with |cy-ay| = 2 the cross lands EXACTLY on EPSILON and the strict
     // < rejects it — the claim is that fine-grained)
-    val ringA = Seq(0.5, 7.0, x1, 9.0, 4.0, 9.0, 4.0, 7.0, 0.5, 7.0)
+    val ringA = Array(0.5, 7.0, x1, 9.0, 4.0, 9.0, 4.0, 7.0, 0.5, 7.0)
     // Ring B: a huge-span x-dominant segment (post-affine frame) whose
     // FP cross-product rounding term dwarfs EPSILON/|dx| — the span-scaled
     // slack must cover it. Its midpoint sits exactly on band edge y = 16.
-    val ringB = Seq(0.0, 8.0, 1.0e9, 24.0, 1.0e9, 40.0, 0.0, 40.0, 0.0, 8.0)
+    val ringB = Array(0.0, 8.0, 1.0e9, 24.0, 1.0e9, 40.0, 0.0, 40.0, 0.0, 8.0)
     val cts = spark.createDataset(Seq(
       ContourRow("adv", 1.0, Seq(PolyRow(ringA, Seq.empty))),
       ContourRow("adv", 2.0, Seq(PolyRow(ringB, Seq.empty)))))
@@ -98,8 +98,8 @@ class SpatialOpsSpec extends AnyFunSuite {
     assert(got == want)
     // the interesting probes really are the on-boundary class (verdict 0:
     // neither inside nor outside -> inside=false), not accidental misses
-    def contains(ring: Seq[Double], x: Double, y: Double) =
-      graft.core.Geom.ringContains(ring.dropRight(2).toArray, x, y)
+    def contains(ring: Array[Double], x: Double, y: Double) =
+      graft.core.Geom.ringContains(ring.dropRight(2), x, y)
     assert(contains(ringA, 0.5, 8.0) == 0)
     assert(contains(ringB, 5.0e8, 16.0) == 0)
     assert(contains(ringA, 2.0, 8.0) == 1 && contains(ringB, 5.0e8, 16.0 + 1e-6) == 1)
@@ -565,7 +565,7 @@ class SpatialOpsSpec extends AnyFunSuite {
     val eng = new ContourEngine(spark, JobConfig(thresholds, smooth = false))
     val ringsRows = eng.contourRings(tiles).collect()
     val want = ringsRows.flatMap { rr =>
-      val open = rr.rings.map { r => r.toArray.dropRight(2) }
+      val open = rr.rings.map(_.dropRight(2))
       val reps = open.map { a =>
         var kx = a(0); var ky = a(1)
         var i = 1
@@ -653,9 +653,9 @@ class SpatialOpsSpec extends AnyFunSuite {
     // (0.5, 0.25) PLUS a far ring 50 units away (every far-ring vertex is
     // beyond the 4-unit clip from threshold 1 and vice versa); threshold 3
     // exists in the list but has NO contours (zero-vertex side)
-    val sq1 = Seq(0.0, 0.0, 2.0, 0.0, 2.0, 2.0, 0.0, 2.0, 0.0, 0.0)
-    val sq2 = Seq(0.5, 0.25, 2.5, 0.25, 2.5, 2.25, 0.5, 2.25, 0.5, 0.25)
-    val far = Seq(50.0, 50.0, 52.0, 50.0, 52.0, 52.0, 50.0, 52.0, 50.0, 50.0)
+    val sq1 = Array(0.0, 0.0, 2.0, 0.0, 2.0, 2.0, 0.0, 2.0, 0.0, 0.0)
+    val sq2 = Array(0.5, 0.25, 2.5, 0.25, 2.5, 2.25, 0.5, 2.25, 0.5, 0.25)
+    val far = Array(50.0, 50.0, 52.0, 50.0, 52.0, 52.0, 50.0, 52.0, 50.0, 50.0)
     val cts = spark.createDataset(Seq(
       ContourRow("hd", 1.0, Seq(PolyRow(sq1, Seq.empty))),
       ContourRow("hd", 2.0, Seq(PolyRow(sq2, Seq.empty), PolyRow(far, Seq.empty)))))
@@ -666,7 +666,7 @@ class SpatialOpsSpec extends AnyFunSuite {
     // local recompute: distinct quantized vertices, plain O(n^2) true min,
     // clip at Rq2 = 2^44 (the window guarantee makes engine == this)
     val rq2 = 4194304L * 4194304L
-    def qv(ring: Seq[Double]): Seq[(Long, Long)] =
+    def qv(ring: Array[Double]): Seq[(Long, Long)] =
       ring.dropRight(2).grouped(2).map(p =>
         (math.floor(p(0) * 1048576.0).toLong, math.floor(p(1) * 1048576.0).toLong)).toSeq
     val vs = Map(1.0 -> qv(sq1).distinct, 2.0 -> (qv(sq2) ++ qv(far)).distinct,
@@ -698,15 +698,15 @@ class SpatialOpsSpec extends AnyFunSuite {
     import graft.model.{ContourRow, PolyRow}
     // an L-shaped CCW hexagon: 5 convex vertices + 1 reflex; a collinear
     // vertex spliced into one edge; plus a CW square hole (all right turns)
-    val ell = Seq(0.0, 0.0, 4.0, 0.0, 4.0, 2.0, 2.0, 2.0, 2.0, 4.0, 1.0, 4.0,
+    val ell = Array(0.0, 0.0, 4.0, 0.0, 4.0, 2.0, 2.0, 2.0, 2.0, 4.0, 1.0, 4.0,
       0.0, 4.0, 0.0, 0.0)
-    val hole = Seq(0.5, 0.5, 0.5, 1.5, 1.5, 1.5, 1.5, 0.5, 0.5, 0.5)
+    val hole = Array(0.5, 0.5, 0.5, 1.5, 1.5, 1.5, 1.5, 0.5, 0.5, 0.5)
     val cts = spark.createDataset(Seq(
       ContourRow("tc", 1.0, Seq(PolyRow(ell, Seq(hole))))))
     val got = SpatialOps.turningCensus(spark, cts, Seq(1.0, 2.0)).collect()
       .map(r => (r.getDouble(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5))).toSeq
-    def census(rings: Seq[Seq[Double]]): (Long, Long, Long, Long, Long) = {
+    def census(rings: Seq[Array[Double]]): (Long, Long, Long, Long, Long) = {
       val ts = rings.flatMap { ring =>
         val n = ring.length / 2 - 1
         (0 until n).map { i =>
@@ -725,17 +725,5 @@ class SpatialOpsSpec extends AnyFunSuite {
     // left, the L's reflex corner turns right, the collinear splice is
     // straight, and the CW hole's 4 corners all turn right
     assert(nv == 11L && nl == 5L && nr == 5L && ns == 1L)
-  }
-
-  test("ringArr: a boxed ArraySeq ring and a List ring give the same primitive array") {
-    val pts = Array(0.5, 1.25, 3.0, -2.0, 0.5, 1.25)
-    // boxed elements: the backing Array[AnyRef] is no Array[Double]
-    val boxed = scala.collection.immutable.ArraySeq
-      .unsafeWrapArray(pts.map(d => java.lang.Double.valueOf(d): AnyRef))
-      .asInstanceOf[Seq[Double]]
-    val primitive = scala.collection.immutable.ArraySeq.unsafeWrapArray(pts)
-    assert(SpatialOps.ringArr(boxed).toSeq == pts.toSeq)
-    assert(SpatialOps.ringArr(pts.toList).toSeq == pts.toSeq)
-    assert(SpatialOps.ringArr(primitive) eq pts, "a primitive ring is read in place")
   }
 }

@@ -42,12 +42,10 @@ class LakeSpec extends AnyFunSuite {
     val closed2 = eng.closedRingsCheckpointed(emptyTiles, table, maxTileCoord = 2)
     val got = eng.contoursFrom(closed2).collect().head
     assert(got.polygons.length == Goldens.issue18Expected.length)
-    got.polygons.zip(want.polygons).foreach { case (a, b) =>
-      assert(a.exterior == b.exterior)
-    }
+    Goldens.assertContours(Seq(got), Seq(want))
     // goldens through the checkpointed path too
     got.polygons.zip(Goldens.issue18Expected).foreach { case (g, e) =>
-      assert(g.exterior == e.toSeq)
+      Goldens.assertRing(g.exterior, e)
     }
     // small grids collapse to a single merge round; lineage intact
     val snaps = Lake.snapshots(spark, table)
@@ -68,7 +66,7 @@ class LakeSpec extends AnyFunSuite {
     val closed = eng.closedRingsCheckpointed(spark.emptyDataset[graft.model.TileRow], table, 2)
     val ps = eng.contoursFrom(closed).collect().head.polygons
     assert(ps.length == 2)
-    assert(ps(0).exterior == Goldens.multiExpected1.toSeq)
+    Goldens.assertRing(ps(0).exterior, Goldens.multiExpected1)
   }
 
   test("time travel by seq; compaction rewrites files row-exactly and appends history") {
@@ -215,7 +213,7 @@ class LakeSpec extends AnyFunSuite {
     // round-0..round-4
     val closed1 = eng.closedRingsCheckpointed(tiles, table, maxTileCoord = 10)
     val got1 = eng.contoursFrom(closed1).collect().sortBy(_.threshold).toSeq
-    assert(got1 == want)
+    Goldens.assertContours(got1, want)
     val ops = Lake.snapshots(spark, table).map(_.op)
     assert(ops == Seq("round-0", "round-1", "round-2", "round-3", "round-4"))
 
@@ -228,7 +226,7 @@ class LakeSpec extends AnyFunSuite {
     val closed2 = eng.closedRingsCheckpointed(
       spark.emptyDataset[graft.model.TileRow], table, maxTileCoord = 10)
     val got2 = eng.contoursFrom(closed2).collect().sortBy(_.threshold).toSeq
-    assert(got2 == want)
+    Goldens.assertContours(got2, want)
     assert(Lake.snapshots(spark, table).map(_.op).count(_ == "round-4") == 1)
   }
 

@@ -50,7 +50,7 @@ class StreamingContourSpec extends AnyFunSuite {
       assert(results.size == 1)
       val first = results.peek()
       assert(first.gridId == "gA")
-      assert(first.polygons.head.exterior == Goldens.simpleExpected.toSeq)
+      Goldens.assertRing(first.polygons.head.exterior, Goldens.simpleExpected)
 
       // append a second grid -> only the new grid is contoured in batch 2
       appendGrid("gB", Goldens.multiGrid)
@@ -98,7 +98,7 @@ class StreamingContourSpec extends AnyFunSuite {
       val want = new graft.engine.ContourEngine(spark, JobConfig(Seq(0.5), smooth = true))
         .contours(GridSynth.tilesFromArray(spark, "gH", Goldens.multiHoleGrid, 10, 10, 5, 5))
         .collect().head
-      assert(got == want, "cross-batch output must be byte-identical to batch")
+      Goldens.assertContours(Seq(got), Seq(want), "cross-batch output must be byte-identical to batch")
     } finally q.stop()
   }
 
@@ -147,7 +147,7 @@ class StreamingContourSpec extends AnyFunSuite {
       assert(got.nonEmpty && got.forall(_.gridId == "gP"))
       val want = new graft.engine.ContourEngine(spark, cfg)
         .contours(spark.createDataset(pTiles)).collect().sortBy(_.threshold).toSeq
-      assert(got == want, "pruned-store output must stay byte-identical")
+      Goldens.assertContours(got, want, "pruned-store output must stay byte-identical")
     } finally q.stop()
     // the store layout is b<batch>/gid=<grid>/ and the completion's read
     // set — ringDirsFor(gP) — touches ONLY gP's partitions, however much
@@ -170,6 +170,32 @@ class StreamingContourSpec extends AnyFunSuite {
     assert(gpMarkers.nonEmpty)
     assert(gp.map(d => new org.apache.hadoop.fs.Path(d).getParent.getName).sorted.toSeq
       == gpMarkers, s"read set $gp must be exactly gP's indexed batches $gpMarkers")
+  }
+
+  test("start and startStateful leave the caller's session conf as it was") {
+    implicit val s = spark
+    val key = "spark.sql.parquet.columnarReaderBatchSize"
+    val caller = spark.newSession()
+    caller.conf.set(key, "48")
+    // one whole grid in one file, written before the stream starts
+    val inDir = Files.createTempDirectory("conf-in").toString
+    DocCodec.encode(GridSynth.tilesFromArray(spark, "gK", Goldens.simpleGrid, 10, 10, 5, 5))
+      .coalesce(1).write.mode("append").parquet(inDir)
+    val entries = Seq("start" -> StreamingContour.start _, "startStateful" -> StreamingContour.startStateful _)
+    for ((name, entry) <- entries) {
+      val ckpt = Files.createTempDirectory(s"conf-ckpt-$name").toString
+      val results = new java.util.concurrent.ConcurrentLinkedQueue[ContourRow]()
+      val q = entry(caller, inDir, ckpt, JobConfig(Seq(0.5), smooth = true)) {
+        (cts, _) => cts.collect().foreach(results.add)
+      }
+      try {
+        assert(caller.conf.get(key) == "48", s"$name changed the caller's $key")
+        q.processAllAvailable()
+        assert(results.size == 1, s"$name: one contour row for the one grid")
+        Goldens.assertRing(results.peek().polygons.head.exterior, Goldens.simpleExpected, name)
+      } finally q.stop()
+      assert(caller.conf.get(key) == "48", s"$name changed the caller's $key")
+    }
   }
 
   test("ring index: retried markers are idempotent and stale markers are skipped") {
