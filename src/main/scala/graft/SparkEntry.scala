@@ -588,8 +588,7 @@ object SparkEntry {
         .selectExpr("event_id", s"cast(event_id % $w as double) + 0.5 as x",
           s"cast(event_id div $w as double) + 0.5 as y")
         .as[(Long, Double, Double)]
-      // scale path: y-band partitioned segments join (nothing collected);
-      // the broadcast pipTag stays as the small-polygon-set fast path
+      // y-band cogroup of ring segments and points (nothing collected)
       graft.engine.SpatialOps.pipTagPartitioned(spark, points, cts)
         .orderBy("point_id", "threshold")
     }),

@@ -1,148 +1,145 @@
 package graft.engine
 
-import graft.core.{Clip, RingIndex}
+import graft.core.Clip
 import graft.model.ContourRow
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Spatial-join operators over the engine's vector outputs:
   *
-  *  - point-in-polygon tagging: broadcast the (small) polygon set, build
-  *    RingIndexes once per partition, tag each point by even-odd depth over
-  *    ALL rings (exteriors + holes) — the scale path for large polygon sets
-  *    is the same operator behind a spatial-key partitioned join;
+  *  - point-in-polygon tagging: ring segments are cut into horizontal
+  *    y-bands, one primitive-array row per (band, ring), and one band
+  *    cogroup tags each point by even-odd depth over ALL rings (exteriors +
+  *    holes); nothing is collected but the threshold set;
   *  - kNN join against contour vertices: grid-cell bucketed join with an
   *    expanding ring search (r = 2 cells first; unresolved queries fall back
   *    to a brute-force pass), deterministic tie-break on (dist, x, y).
   */
 object SpatialOps {
 
-  /** For each (id, x, y) point and each threshold: inside = odd number of
-    * containing rings of that threshold's MultiPolygon. Points on a ring
-    * boundary count as not-inside-nor-outside (verdict 0) and are excluded
-    * from the odd count, matching the reference's ring_contains. Rings
-    * are tested without their closing point (Clip.openRing): the
-    * reference's ring_contains scans the degenerate wrap segment (first ==
-    * last), which marks the whole horizontal line through the ring's first
-    * vertex as "on boundary" — harmless for the reference's hole walk,
-    * wrong for point tagging.
-    */
-  def pipTag(spark: SparkSession, points: Dataset[(Long, Double, Double)],
-             contours: Dataset[ContourRow]): DataFrame = {
-    import spark.implicits._
-    // polygons are the small side: collect + broadcast
-    val polys: Array[(Double, Array[Array[Double]])] = contours.collect().map { c =>
-      (c.threshold, c.polygons.flatMap(p => p.exterior +: p.holes).map(Clip.openRing).toArray)
-    }
-    val bc = spark.sparkContext.broadcast(polys)
-    points.mapPartitions { it =>
-      val indexed = bc.value.map { case (t, rings) =>
-        (t, rings.map(r => (graft.core.Geom.bbox(r), new RingIndex(r))))
-      }
-      it.flatMap { case (id, x, y) =>
-        indexed.iterator.map { case (t, rings) =>
-          var depth = 0
-          rings.foreach { case (bb, idx) =>
-            if (x >= bb(0) && x <= bb(2) && y >= bb(1) && y <= bb(3) &&
-                idx.contains(x, y) == 1) depth += 1
-          }
-          (id, t, depth % 2 == 1)
-        }
-      }
-    }.toDF("point_id", "threshold", "inside")
-  }
+  /** Height of a point-in-polygon band, in coordinate units. */
+  private val PipBand = 8.0
 
-  /** Scale-path point-in-polygon tagging: NOTHING is collected or
-    * broadcast whole. Ring segments (closing duplicate dropped; the
-    * ring-closure segment kept, so verdicts match the reference's
-    * ring_contains on the same ring) are replicated to the horizontal
-    * y-bands their y-span covers; points join their own band, so a point
-    * meets exactly the segments that can straddle its ray or claim it as
-    * on-boundary. Per (point, threshold, ring): verdict 0 if any segment
-    * contains the point, else ray parity — identical semantics (and the
-    * identical f64 crossing expression) to pipTag's indexed walk. Shuffle
-    * volume is O(segments + points), partitioned by band; a band holds
-    * only the isolines crossing it, never a whole polygon set.
+  @inline private def pipBand(y: Double): Int = math.floor(y / PipBand).toInt
+
+  /** Point-in-polygon tagging: for each (id, x, y) point and threshold,
+    * inside = an odd number of that threshold's rings (every grid's
+    * exteriors and holes, tested without their closing point) strictly
+    * contain the point. A point on a ring's boundary is neither inside nor
+    * outside that ring (the reference's ring_contains verdict 0).
+    *
+    * Each ring becomes one row per y-band its segments reach, holding
+    * those segments in one primitive array; points key on their own band,
+    * and one cogroup per band walks every ring row against the band's
+    * points: verdict 0 if any segment of the ring contains the point, else
+    * ray parity with the reference's f64 crossing expression. No row per
+    * (point, segment) pair exists, so the shuffle is O(segments + points),
+    * and a band holds only the rings crossing it. Every (point, threshold)
+    * pair gets a row; a band with no rings emits all-false rows.
+    *
+    * Returns (point_id: long, threshold: double, inside: boolean).
     */
   def pipTagPartitioned(spark: SparkSession, points: Dataset[(Long, Double, Double)],
-                        contours: Dataset[ContourRow], yBand: Double = 8.0): DataFrame = {
+                        contours: Dataset[ContourRow]): DataFrame = {
     import spark.implicits._
-    // (threshold, ringId, ax, ay, bx, by, band) — a/b keep the reference's
-    // (current, previous) roles so the crossing division is bit-identical
-    val segs = contours.flatMap { c =>
-      val rings = c.polygons.iterator.flatMap(p => Iterator.single(p.exterior) ++ p.holes.iterator)
-      rings.zipWithIndex.flatMap { case (closedRing, ri) =>
-        val ring = Clip.openRing(closedRing)
-        val n = ring.length / 2
-        val rid = s"${c.gridId}:${c.threshold}:$ri"
-        (0 until n).iterator.flatMap { i =>
-          val j = if (i == 0) n - 1 else i - 1
-          val ax = ring(2 * i); val ay = ring(2 * i + 1)
-          val bx = ring(2 * j); val by = ring(2 * j + 1)
-          // Bands cover the y-span plus the segment's EXACT on-boundary
-          // claim slack (the same derivation as RingIndex's margins):
-          //  - |dx| >= EPSILON (segmentContains' x-dominant branch):
-          //    |cross| < EPSILON bounds the claimed point's y-deviation
-          //    from the segment by EPSILON/|dx| in real arithmetic; the FP
-          //    evaluation of the cross product adds rounding error up to
-          //    ~2*EPSILON*(|dx*(cy-ay)| + |(cx-ax)*dy|), i.e. proportional
-          //    to the SEGMENT SPAN in arbitrary (post-affine) frames —
-          //    8*EPSILON*max(1, dx+dy) over-bounds it (deviation D solves
-          //    D <= EPSILON/dx + 2*EPSILON*(D + span));
-          //  - |dx| < EPSILON (vertical branch, incl. the post-smoothing
-          //    cancellation case 0 < |dx| < EPSILON): within(ay, cy, by)
-          //    requires y inside the EXACT y-span — slack 0. (The old
-          //    constant 1.0 slack was real-arithmetic-tight only for
-          //    |dx| >= EPSILON and unneeded for |dx| < EPSILON.)
-          // Crossings need y strictly within the span and are unaffected.
-          val adx = math.abs(bx - ax); val ady = math.abs(by - ay)
-          val slack =
-            if (adx < graft.core.Geom.Epsilon) 0.0
-            else graft.core.Geom.Epsilon / adx +
-              8.0 * graft.core.Geom.Epsilon * math.max(1.0, adx + ady)
-          val b0 = math.floor((math.min(ay, by) - slack) / yBand).toInt
-          val b1 = math.floor((math.max(ay, by) + slack) / yBand).toInt
-          (b0 to b1).iterator.map(b => (c.threshold, rid, ax, ay, bx, by, b))
-        }
-      }
-    }.toDF("threshold", "rid", "ax", "ay", "bx", "by", "band")
-    val pts = points.toDF("point_id", "x", "y")
-      .withColumn("band", floor(col("y") / yBand).cast("int"))
-    val perRing = pts.join(segs, Seq("band"))
-      .select(col("point_id"), col("x"), col("y"), col("threshold"), col("rid"),
-        col("ax"), col("ay"), col("bx"), col("by"))
-      .as[(Long, Double, Double, Double, String, Double, Double, Double, Double)]
-      .map { case (id, x, y, t, rid, ax, ay, bx, by) =>
-        val on = graft.core.Geom.segmentContains(ax, ay, bx, by, x, y)
-        val crossing = !on && ((ay > y) != (by > y)) &&
-          x < (bx - ax) * (y - ay) / (by - ay) + ax
-        (id, t, rid, on, if (crossing) 1L else 0L)
-      }
-      .toDF("point_id", "threshold", "rid", "on_seg", "crossing")
-      .groupBy("point_id", "threshold", "rid")
-      .agg(max(col("on_seg")).as("on_seg"), sum(col("crossing")).as("crossings"))
-      // contains == 1 (strictly inside): not on any segment AND odd parity
-      .withColumn("in_ring", !col("on_seg") && col("crossings") % 2 === 1)
-    val verdicts = perRing.groupBy("point_id", "threshold")
-      .agg(sum(when(col("in_ring"), 1L).otherwise(0L)).as("depth"))
-      .select(col("point_id"), col("threshold"), (col("depth") % 2 === 1).as("inside"))
-    // points that met no segments of a threshold are outside — fill the
-    // full (point x threshold) frame. The distinct threshold set is
     // CONFIG-cardinality (the builder's threshold ladder), not data-
-    // cardinality, so collecting it into an exploded literal is bounded
-    // and keeps the plan free of nested-loop joins.
-    val tsArr = contours.map(_.threshold).distinct().collect().sorted
-    val frame = points.toDF("point_id", "x", "y")
-      .select(col("point_id"), explode(lit(tsArr)).as("threshold"))
-    frame.join(verdicts, Seq("point_id", "threshold"), "left")
-      .na.fill(false, Seq("inside"))
-      .select("point_id", "threshold", "inside")
+    // cardinality, so collecting it is bounded; distinct() normalizes -0.0,
+    // and the index lookup below uses == to match it
+    val ts = contours.map(_.threshold).distinct().collect().sorted
+    val rings = contours.flatMap { c =>
+      val t = ts.indexWhere(_ == c.threshold)
+      c.polygons.iterator.flatMap(p => Iterator.single(p.exterior) ++ p.holes.iterator)
+        .flatMap(r => bandRows(Clip.openRing(r)).map { case (b, segs) => (b, t, segs) })
+    }
+    points.groupByKey { case (_, _, y) => pipBand(y) }
+      .cogroup(rings.groupByKey(_._1)) { (_, pts, ringRows) => tagBand(pts, ringRows, ts) }
+      .toDF("point_id", "threshold", "inside")
+  }
+
+  /** One (band, segments) pair per band an open ring's segments reach;
+    * each segment packs (ax, ay, bx, by), with a/b in the reference's
+    * (current, previous) roles so the crossing division is bit-identical.
+    */
+  private def bandRows(ring: Array[Double]): Iterator[(Int, Array[Double])] = {
+    val n = ring.length / 2
+    val bands = new scala.collection.mutable.LongMap[graft.core.DoubleBuf]
+    var i = 0
+    while (i < n) {
+      val j = if (i == 0) n - 1 else i - 1
+      val ax = ring(2 * i); val ay = ring(2 * i + 1)
+      val bx = ring(2 * j); val by = ring(2 * j + 1)
+      // Bands cover the y-span plus the segment's EXACT on-boundary
+      // claim slack (the same derivation as RingIndex's margins):
+      //  - |dx| >= EPSILON (segmentContains' x-dominant branch):
+      //    |cross| < EPSILON bounds the claimed point's y-deviation
+      //    from the segment by EPSILON/|dx| in real arithmetic; the FP
+      //    evaluation of the cross product adds rounding error up to
+      //    ~2*EPSILON*(|dx*(cy-ay)| + |(cx-ax)*dy|), i.e. proportional
+      //    to the SEGMENT SPAN in arbitrary (post-affine) frames —
+      //    8*EPSILON*max(1, dx+dy) over-bounds it (deviation D solves
+      //    D <= EPSILON/dx + 2*EPSILON*(D + span));
+      //  - |dx| < EPSILON (vertical branch, incl. the post-smoothing
+      //    cancellation case 0 < |dx| < EPSILON): within(ay, cy, by)
+      //    requires y inside the EXACT y-span — slack 0.
+      // Crossings need y strictly within the span and are unaffected.
+      val adx = math.abs(bx - ax); val ady = math.abs(by - ay)
+      val slack =
+        if (adx < graft.core.Geom.Epsilon) 0.0
+        else graft.core.Geom.Epsilon / adx +
+          8.0 * graft.core.Geom.Epsilon * math.max(1.0, adx + ady)
+      for (b <- pipBand(math.min(ay, by) - slack) to pipBand(math.max(ay, by) + slack)) {
+        val buf = bands.getOrElseUpdate(b, new graft.core.DoubleBuf(16))
+        buf.addPt(ax, ay); buf.addPt(bx, by)
+      }
+      i += 1
+    }
+    bands.iterator.map { case (b, buf) => (b.toInt, buf.toArray) }
+  }
+
+  /** Tags one band's points against its (band, threshold index, segments)
+    * ring rows: one (point_id, threshold, inside) row per point and
+    * threshold.
+    */
+  private def tagBand(pts: Iterator[(Long, Double, Double)],
+                      ringRows: Iterator[(Int, Int, Array[Double])],
+                      ts: Array[Double]): Iterator[(Long, Double, Boolean)] = {
+    val idB = new scala.collection.mutable.ArrayBuilder.ofLong
+    val xB = new scala.collection.mutable.ArrayBuilder.ofDouble
+    val yB = new scala.collection.mutable.ArrayBuilder.ofDouble
+    pts.foreach { case (id, x, y) => idB += id; xB += x; yB += y }
+    val ids = idB.result(); val xs = xB.result(); val ys = yB.result()
+    val np = ids.length
+    if (np == 0) return Iterator.empty // a band of segments only
+    // depth parity per (threshold index, point)
+    val depthOdd = new Array[Boolean](ts.length * np)
+    ringRows.foreach { case (_, t, segs) =>
+      val base = t * np
+      var p = 0
+      while (p < np) {
+        val x = xs(p); val y = ys(p)
+        var on = false; var odd = false
+        var k = 0
+        while (!on && k < segs.length) {
+          val ax = segs(k); val ay = segs(k + 1); val bx = segs(k + 2); val by = segs(k + 3)
+          if (graft.core.Geom.segmentContains(ax, ay, bx, by, x, y)) on = true
+          else if (((ay > y) != (by > y)) && x < (bx - ax) * (y - ay) / (by - ay) + ax)
+            odd = !odd
+          k += 4
+        }
+        // contains == 1 (strictly inside): on no segment AND odd parity
+        if (!on && odd) depthOdd(base + p) = !depthOdd(base + p)
+        p += 1
+      }
+    }
+    Iterator.range(0, ts.length).flatMap { t =>
+      Iterator.range(0, np).map(p => (ids(p), ts(t), depthOdd(t * np + p)))
+    }
   }
 
   /** Zonal statistics — the classic raster x vector operator: aggregate a
     * value per sample point over the ZONES defined by each threshold's
     * MultiPolygon (even-odd over all rings, boundary points excluded, the
-    * same verdict as pipTag). Built on the y-band partitioned PIP join, so
+    * same verdict as pipTagPartitioned). Built on that y-band PIP cogroup, so
     * nothing is collected and the shuffle volume is O(segments + points);
     * the aggregation is one map-side-combinable pass over the tagged
     * frame. Values arrive pre-quantized (`qv`, e.g. floor(v * 2^20)) so

@@ -18,7 +18,7 @@ class SpatialOpsSpec extends AnyFunSuite {
     val cts = new ContourEngine(spark, JobConfig(thresholds, smooth = false)).contours(tiles)
     val points = spark.createDataset(
       (0 until w * h by 7).map(i => (i.toLong, (i % w) + 0.5, (i / w) + 0.5)))
-    val tagged = SpatialOps.pipTag(spark, points, cts)
+    val tagged = PipReference.pipTag(spark, points, cts)
       .as[(Long, Double, Boolean)].collect()
     tagged.foreach { case (id, t, inside) =>
       assert(inside == (data(id.toInt) >= t), s"point $id t=$t")
@@ -33,7 +33,7 @@ class SpatialOpsSpec extends AnyFunSuite {
       (0L, 4.5, 5.5),  // in the hole -> outside
       (1L, 3.25, 5.5), // in the ring material -> inside
       (2L, 0.5, 0.5))) // far outside
-    val got = SpatialOps.pipTag(spark, points, cts)
+    val got = PipReference.pipTag(spark, points, cts)
       .as[(Long, Double, Boolean)].collect().sortBy(_._1).map(_._3).toSeq
     assert(got == Seq(false, true, false))
   }
@@ -50,7 +50,7 @@ class SpatialOpsSpec extends AnyFunSuite {
         (0 until w * h by 13).map(i => (10000L + i, (i % w) + 0.5, (i / w) + 0.5)))
     def norm(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Double, Boolean)].collect().sortBy(r => (r._1, r._2)).toSeq
-    val a = norm(SpatialOps.pipTag(spark, points, cts))
+    val a = norm(PipReference.pipTag(spark, points, cts))
     val b = norm(SpatialOps.pipTagPartitioned(spark, points, cts))
     assert(a == b)
     assert(a.exists(_._3) && a.exists(!_._3))
@@ -93,7 +93,7 @@ class SpatialOpsSpec extends AnyFunSuite {
     val points = spark.createDataset(probes)
     def norm(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Double, Boolean)].collect().sortBy(r => (r._1, r._2)).toSeq
-    val want = norm(SpatialOps.pipTag(spark, points, cts))
+    val want = norm(PipReference.pipTag(spark, points, cts))
     val got = norm(SpatialOps.pipTagPartitioned(spark, points, cts))
     assert(got == want)
     // the interesting probes really are the on-boundary class (verdict 0:
@@ -104,6 +104,49 @@ class SpatialOpsSpec extends AnyFunSuite {
     assert(contains(ringB, 5.0e8, 16.0) == 0)
     assert(contains(ringA, 2.0, 8.0) == 1 && contains(ringB, 5.0e8, 16.0 + 1e-6) == 1)
     assert(want.count(_._3) >= 2) // the strictly-inside probes tag true
+  }
+
+  test("pipTagPartitioned: a zero-length segment claims its whole y-line") {
+    import spark.implicits._
+    import graft.model.{ContourRow, PolyRow}
+    // a 16x16 square whose right side repeats the vertex (16, 12): the
+    // degenerate segment (16, 12)-(16, 12) is collinear with every point,
+    // and segmentContains' vertical branch then claims every point with
+    // y == 12, however far away in x
+    val ring = Array(0.0, 0.0, 16.0, 0.0, 16.0, 12.0, 16.0, 12.0, 16.0, 16.0, 0.0, 16.0, 0.0, 0.0)
+    val cts = spark.createDataset(Seq(ContourRow("deg", 1.0, Seq(PolyRow(ring, Seq.empty)))))
+    val points = spark.createDataset(Seq(
+      (0L, 2.0, 12.0),  // strictly inside, on the repeated vertex's y, 14 away in x
+      (1L, 2.0, 11.0))) // strictly inside, off that line
+    assert(graft.core.Geom.ringContains(graft.core.Clip.openRing(ring), 2.0, 12.0) == 0)
+    def norm(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, Double, Boolean)].collect().sortBy(r => (r._1, r._2)).toSeq
+    val want = Seq((0L, 1.0, false), (1L, 1.0, true))
+    assert(norm(PipReference.pipTag(spark, points, cts)) == want)
+    assert(norm(SpatialOps.pipTagPartitioned(spark, points, cts)) == want)
+  }
+
+  test("pipTagPartitioned: one row per (point, threshold), even with no segments in reach") {
+    import spark.implicits._
+    import graft.model.{ContourRow, PolyRow}
+    import org.apache.spark.sql.types.{BooleanType, DoubleType, LongType}
+    val square = (x0: Double) => Array(x0, 0.0, x0 + 4.0, 0.0, x0 + 4.0, 4.0, x0, 4.0, x0, 0.0)
+    // threshold 2.0's ring contains no point
+    val cts = spark.createDataset(Seq(
+      ContourRow("frame", 1.0, Seq(PolyRow(square(0.0), Seq.empty))),
+      ContourRow("frame", 2.0, Seq(PolyRow(square(100.0), Seq.empty)))))
+    val points = spark.createDataset(Seq(
+      (0L, 2.0, 2.0),    // inside threshold 1.0's ring
+      (1L, 2.0, 50.0),   // a band no segment reaches
+      (2L, 50.0, 2.0),   // a band with segments, outside both rings
+      (3L, 2.0, -30.0))) // a negative band no segment reaches
+    val tagged = SpatialOps.pipTagPartitioned(spark, points, cts)
+    assert(tagged.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
+      Seq(("point_id", LongType), ("threshold", DoubleType), ("inside", BooleanType)))
+    val got = tagged.as[(Long, Double, Boolean)].collect().sortBy(r => (r._1, r._2)).toSeq
+    assert(got == (for (id <- 0L to 3L; t <- Seq(1.0, 2.0)) yield (id, t, id == 0L && t == 1.0)))
+    assert(SpatialOps.pipTagPartitioned(spark, spark.emptyDataset[(Long, Double, Double)], cts)
+      .count() == 0)
   }
 
   test("pipTagPartitioned handles a polygon set with many rings (multi-grid)") {
@@ -124,7 +167,7 @@ class SpatialOpsSpec extends AnyFunSuite {
     // single-grid-at-a-time broadcast reference
     val got = norm(SpatialOps.pipTagPartitioned(spark, points, cts))
     val perGrid = (0 until 60).map { g =>
-      SpatialOps.pipTag(spark, points, cts.filter(_.gridId == s"g$g"))
+      PipReference.pipTag(spark, points, cts.filter(_.gridId == s"g$g"))
         .as[(Long, Double, Boolean)].collect()
     }
     // xor of per-grid parities == global parity
@@ -149,7 +192,7 @@ class SpatialOpsSpec extends AnyFunSuite {
       .as[(Double, Long, Option[Long], Option[Long], Option[Long])]
       .collect().sortBy(_._1).toSeq
     // expected: the (independently tested) broadcast PIP path + in-memory agg
-    val tagged = SpatialOps.pipTag(spark, pts, cts)
+    val tagged = PipReference.pipTag(spark, pts, cts)
       .as[(Long, Double, Boolean)].collect()
     val want = tagged.groupBy(_._2).map { case (t, rows) =>
       val in = rows.filter(_._3).map(r => qvOf(r._1))
