@@ -2,6 +2,7 @@ package graft.engine
 
 import graft.core.Clip
 import graft.model.ContourRow
+import org.apache.spark.HashPartitioner
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -28,14 +29,21 @@ object SpatialOps {
     * contain the point. A point on a ring's boundary is neither inside nor
     * outside that ring (the reference's ring_contains verdict 0).
     *
-    * Each ring becomes one row per y-band its segments reach, holding
-    * those segments in one primitive array; points key on their own band,
-    * and one cogroup per band walks every ring row against the band's
-    * points: verdict 0 if any segment of the ring contains the point, else
-    * ray parity with the reference's f64 crossing expression. No row per
-    * (point, segment) pair exists, so the shuffle is O(segments + points),
-    * and a band holds only the rings crossing it. Every (point, threshold)
-    * pair gets a row; a band with no rings emits all-false rows.
+    * Each ring becomes one record per y-band its segments reach, holding
+    * those segments in one primitive array; each point partition packs its
+    * points into one primitive-array record per band, and one cogroup per
+    * band walks every ring record against the band's points: verdict 0 if
+    * any segment of the ring contains the point, else ray parity with the
+    * reference's f64 crossing expression. No record per (point, segment)
+    * pair exists, so the shuffle is O(segments + points) in bytes and
+    * O(rings + bands x partitions) in records, and a band holds only the
+    * rings crossing it. Every (point, threshold) pair gets a row; a band
+    * with no rings emits all-false rows.
+    *
+    * The cogroup is an RDD cogroup on a band-modulo HashPartitioner with
+    * `spark.sql.shuffle.partitions` partitions, so a call plans no Catalyst
+    * query and derives no typed encoder beyond its result's: that
+    * driver-side work is a fixed cost of every call.
     *
     * Returns (point_id: long, threshold: double, inside: boolean).
     */
@@ -43,20 +51,22 @@ object SpatialOps {
                         contours: Dataset[ContourRow]): DataFrame = {
     import spark.implicits._
     // CONFIG-cardinality (the builder's threshold ladder), not data-
-    // cardinality, so collecting it is bounded; distinct() normalizes -0.0,
+    // cardinality, so collecting it is bounded; + 0.0 turns -0.0 into 0.0,
     // and the index lookup below uses == to match it
-    val ts = contours.map(_.threshold).distinct().collect().sorted
-    val rings = contours.flatMap { c =>
+    val ts = contours.rdd.aggregate(Set.empty[Double])((s, c) => s + (c.threshold + 0.0), _ ++ _)
+      .toArray.sorted
+    val rings = contours.rdd.flatMap { c =>
       val t = ts.indexWhere(_ == c.threshold)
       c.polygons.iterator.flatMap(p => Iterator.single(p.exterior) ++ p.holes.iterator)
-        .flatMap(r => bandRows(Clip.openRing(r)).map { case (b, segs) => (b, t, segs) })
+        .flatMap(r => bandRows(Clip.openRing(r)).map { case (b, segs) => (b, (t, segs)) })
     }
-    points.groupByKey { case (_, _, y) => pipBand(y) }
-      .cogroup(rings.groupByKey(_._1)) { (_, pts, ringRows) => tagBand(pts, ringRows, ts) }
+    val byBand = new HashPartitioner(spark.sessionState.conf.numShufflePartitions)
+    spark.createDataset(points.rdd.mapPartitions(bandPoints).cogroup(rings, byBand)
+      .flatMap { case (_, (chunks, ringRows)) => tagBand(chunks, ringRows, ts) })
       .toDF("point_id", "threshold", "inside")
   }
 
-  /** One (band, segments) pair per band an open ring's segments reach;
+  /** One (band, segments) record per band an open ring's segments reach;
     * each segment packs (ax, ay, bx, by), with a/b in the reference's
     * (current, previous) roles so the crossing division is bit-identical.
     */
@@ -96,27 +106,39 @@ object SpatialOps {
     bands.iterator.map { case (b, buf) => (b.toInt, buf.toArray) }
   }
 
-  /** Tags one band's points against its (band, threshold index, segments)
-    * ring rows: one (point_id, threshold, inside) row per point and
-    * threshold.
+  /** One partition's points as one (band, (ids, packed x, y)) record per
+    * band they fall in.
     */
-  private def tagBand(pts: Iterator[(Long, Double, Double)],
-                      ringRows: Iterator[(Int, Int, Array[Double])],
+  private def bandPoints(pts: Iterator[(Long, Double, Double)])
+      : Iterator[(Int, (Array[Long], Array[Double]))] = {
+    val bands = new scala.collection.mutable.LongMap[
+      (scala.collection.mutable.ArrayBuilder.ofLong, graft.core.DoubleBuf)]
+    pts.foreach { case (id, x, y) =>
+      val (ids, xys) = bands.getOrElseUpdate(pipBand(y),
+        (new scala.collection.mutable.ArrayBuilder.ofLong, new graft.core.DoubleBuf(64)))
+      ids += id; xys.addPt(x, y)
+    }
+    bands.iterator.map { case (b, (ids, xys)) => (b.toInt, (ids.result(), xys.toArray)) }
+  }
+
+  /** Tags one band's points (one chunk per point partition) against its
+    * (threshold index, segments) ring records: one (point_id, threshold,
+    * inside) row per point and threshold.
+    */
+  private def tagBand(chunks: Iterable[(Array[Long], Array[Double])],
+                      ringRows: Iterable[(Int, Array[Double])],
                       ts: Array[Double]): Iterator[(Long, Double, Boolean)] = {
-    val idB = new scala.collection.mutable.ArrayBuilder.ofLong
-    val xB = new scala.collection.mutable.ArrayBuilder.ofDouble
-    val yB = new scala.collection.mutable.ArrayBuilder.ofDouble
-    pts.foreach { case (id, x, y) => idB += id; xB += x; yB += y }
-    val ids = idB.result(); val xs = xB.result(); val ys = yB.result()
+    val ids = Array.concat(chunks.map(_._1).toSeq: _*)
+    val xys = Array.concat(chunks.map(_._2).toSeq: _*)
     val np = ids.length
     if (np == 0) return Iterator.empty // a band of segments only
     // depth parity per (threshold index, point)
     val depthOdd = new Array[Boolean](ts.length * np)
-    ringRows.foreach { case (_, t, segs) =>
+    ringRows.foreach { case (t, segs) =>
       val base = t * np
       var p = 0
       while (p < np) {
-        val x = xs(p); val y = ys(p)
+        val x = xys(2 * p); val y = xys(2 * p + 1)
         var on = false; var odd = false
         var k = 0
         while (!on && k < segs.length) {
