@@ -1,8 +1,9 @@
 package graft.engine
 
 import graft.core._
+import graft.index.CellIndex
 import graft.model._
-import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 import scala.collection.immutable.ArraySeq
@@ -12,38 +13,43 @@ import scala.collection.mutable.ArrayBuffer
   *
   *   tiles --flatMap (narrow)--> per-(tile, threshold) marching-squares
   *   kernel (closed rings + open boundary fragments)
-  *   --O(log tiles) hash-partitioned shuffle rounds keyed by hierarchical
-  *   2^l x 2^l spatial blocks--> cross-tile ring closure
-  *   --shuffle by (gridId, threshold)--> assembly reducer (closure-order
-  *   sort, affine, hole nesting / even-odd bands).
+  *   [> 8x8 tiles per grid only: merge rounds 1..L-1, persisted shuffles
+  *   keyed by hierarchical 2^l x 2^l spatial blocks]
+  *   --ONE shuffle by (gridId, threshold), or (gridId, band chunk)--> assembly
+  *   reducer: last merge round (closeRings), closure-order sort, affine,
+  *   hole nesting / even-odd bands.
   *
-  * Scale notes: the kernel stage is embarrassingly parallel and dominates
-  * cost; shuffled bytes are only contour boundary fragments (proportional to
-  * isoline length crossing tile borders, not raster size). Each merge round
-  * halves the number of open blocks; fragments per group are bounded by the
-  * block perimeter. AQE coalesces the small later rounds.
+  * At <= 8x8 tiles per grid a job is decode + kernel + one shuffle, with no
+  * cache and no barrier. The kernel stage is embarrassingly parallel and
+  * dominates cost; each intermediate round halves the open blocks.
   *
   * Output rings are byte-identical to the reference's single-threaded
   * output (order and rotation included) — see Stitcher/FragmentMerge.
-  * Each step (kernel rows, merge rows, round count, ring reducer) is
-  * written once on the companion object; the streaming and SQL paths call
-  * the same functions.
+  * Each step (kernel rows, merge rows, last round, round count, ring
+  * reducer) is written once on the companion object; the streaming and SQL
+  * paths call the same functions.
   */
 final class ContourEngine(spark: SparkSession, cfg: JobConfig) {
-  import spark.implicits._
+  import ContourEngine._
 
   private val thresholds: Array[Double] = cfg.thresholds.toArray
 
-  // Every dataset this engine persists. Intermediate merge rounds are
-  // unpersisted as soon as the next round materializes (see
-  // closedRingsImpl); the caches that back the RETURNED lazy Datasets
-  // (kernel output, last persisted merge round) must live until the caller's
-  // action completes — callers release them afterwards via releaseCaches().
+  // Every cache this engine holds: a kernel output it persisted and the
+  // live round of a deep merge hierarchy (earlier rounds are released as
+  // the next one materializes). The caches behind a RETURNED lazy Dataset
+  // must live until the caller's action completes — callers release them
+  // afterwards via releaseCaches().
   private val tracked = ArrayBuffer[Dataset[_]]()
-  private def track[T](d: Dataset[T]): Dataset[T] =
-    synchronized { tracked += d; d }
   private def release(d: Dataset[_]): Unit = synchronized {
     d.unpersist(blocking = false); tracked -= d
+  }
+
+  /** Persist `d`, force it with one count, and track the cache. */
+  private def materialize(d: Dataset[RingFragRow]): Dataset[RingFragRow] = {
+    val p = d.persist(StorageLevel.MEMORY_AND_DISK)
+    synchronized(tracked += p)
+    p.count()
+    p
   }
 
   /** Unpersist every cache this engine still holds (non-blocking). Call
@@ -70,90 +76,61 @@ final class ContourEngine(spark: SparkSession, cfg: JobConfig) {
     }
   }
 
-  /** Iterative boundary-stitch fixpoint: level l groups open fragments by
-    * (grid, threshold, tileX >> l, tileY >> l) and merges within the block.
-    * `maxTileCoord` bounds the number of rounds; the final round merges
-    * globally per (grid, threshold), so every ring must close there.
+  /** The merge state BEFORE its last round, lazily: kernel-closed rings,
+    * rings closed in rounds 1..levels-1, the fragments still open, and the
+    * ti = -1 markers. The last round runs in the assembly reducers: finish
+    * this state with a `*From` call (or [[ContourEngine.closeRings]]). At
+    * levels == 1 (<= 8x8 tiles per grid) it IS `kernelOut`. Deeper
+    * hierarchies persist the kernel output (unless already cached) and
+    * each round with one count, releasing the previous round's cache, so
+    * they hold O(one round's state); kernel-closed rings never re-ship.
     */
-  def closedRings(kernelOut0: Dataset[RingFragRow], maxTileCoord: Int): Dataset[RingFragRow] =
-    closedRingsImpl(kernelOut0, maxTileCoord, prePersisted = false)
-
-  private def closedRingsImpl(kernelOut0: Dataset[RingFragRow], maxTileCoord: Int,
-                              prePersisted: Boolean): Dataset[RingFragRow] = {
-    // ONE eager barrier: the kernel cache feeds several downstream
-    // shuffles, which the DAG scheduler may launch concurrently — without
-    // the barrier the dominant decode+kernel stage races a double compute.
-    val kernelOut =
-      if (prePersisted) kernelOut0
-      else {
-        val p = track(kernelOut0.persist(StorageLevel.MEMORY_AND_DISK))
-        p.count()
-        p
-      }
+  def closedRings(kernelOut: Dataset[RingFragRow], maxTileCoord: Int): Dataset[RingFragRow] = {
     val levels = ContourEngine.mergeLevels(maxTileCoord)
-    // Merge rounds are ROLLED FORWARD: round l's state = every cross-tile
-    // closed ring found in rounds 1..l plus the still-open fragments.
-    // Intermediate states (l < levels) persist eagerly (one count) and the
-    // PREVIOUS round's cache is unpersisted right after — memory held by
-    // the merge hierarchy stays O(one round's state), not O(sum of rounds).
-    // The count barrier only exists on deep hierarchies; the levels == 1
-    // fast path (the common bench shape) keeps the single kernel barrier
-    // and zero extra stages. Kernel-closed rings never re-ship: they stay
-    // in the kernel cache and join the result union directly.
-    val kernelClosed = kernelOut.filter(_.closed)
-    var state: Dataset[RingFragRow] = null // persisted mixed state of rounds >= 1
-    var l = 1
-    while (l <= levels) {
-      val open = if (state == null) kernelOut.filter(!_.closed) else state.filter(!_.closed)
-      val prevClosed = if (state == null) spark.emptyDataset[RingFragRow] else state.filter(_.closed)
-      val next = prevClosed.union(mergeOpen(open, l, levels))
-      if (l < levels) {
-        val p = track(next.persist(StorageLevel.MEMORY_AND_DISK))
-        p.count()
-        if (state != null) release(state)
-        state = p
-      } else {
-        // final round: a single consumer (the caller's one action) — lazy,
-        // reading the kernel cache / the last persisted round
+    if (levels == 1) kernelOut
+    else {
+      val kernel = if (kernelOut.storageLevel == StorageLevel.NONE) materialize(kernelOut) else kernelOut
+      var state = kernel.filter(!_.closed) // rolled forward: closed in rounds 1..l + open
+      for (l <- 1 until levels) {
+        val next = materialize(state.filter(_.closed).union(mergeOpen(state.filter(!_.closed))))
+        if (l > 1) release(state)
         state = next
       }
-      l += 1
+      kernel.filter(_.closed).union(state)
     }
-    kernelClosed.union(state.filter(_.closed))
   }
 
-  /** Merge round `level` of `levels`: group open fragments by blocks one
-    * bit coarser than their input coords (round l's input coords are
-    * already level-(l-1) block coords, so tileX >> l overall) and stitch
-    * within each block. The final round merges globally per (grid,
-    * threshold) — shift 31 zeroes every non-negative coordinate — and
-    * fails loudly if anything stays open.
+  /** One intermediate merge round: stitch open fragments within blocks one
+    * bit coarser than their coords (round l's input coords are level-(l-1)
+    * block coords, so tileX >> l overall).
     */
-  private def mergeOpen(open: Dataset[RingFragRow], level: Int,
-                        levels: Int): Dataset[RingFragRow] = {
-    val isFinal = level == levels
-    val shift = if (isFinal) 31 else 1
-    open.groupByKey(r => (r.gridId, r.ti,
-        graft.index.CellIndex.parent(graft.index.CellIndex.morton(r.bx, r.by), shift)))
+  private def mergeOpen(open: Dataset[RingFragRow]): Dataset[RingFragRow] =
+    open.groupByKey(r => (r.gridId, r.ti, CellIndex.parent(CellIndex.morton(r.bx, r.by), 1)))(BlockKeyEnc)
       .flatMapGroups { (key: (String, Int, Long), it: Iterator[RingFragRow]) =>
         val (gid, ti, cell) = key
-        val out = ContourEngine.mergeRows(gid, ti,
-          graft.index.CellIndex.mortonX(cell), graft.index.CellIndex.mortonY(cell), it)
-        if (isFinal && out.exists(!_.closed))
-          throw new IllegalStateException(
-            s"${out.count(!_.closed)} fragments failed to close for grid=$gid ti=$ti")
-        out.iterator
+        ContourEngine.mergeRows(gid, ti, CellIndex.mortonX(cell), CellIndex.mortonY(cell), it).iterator
+      }
+
+  /** The last merge round as a shuffle of its own, for closed-ring
+    * consumers: closeRings per (grid, threshold); markers pass through.
+    */
+  private def closeAll(state: Dataset[RingFragRow]): Dataset[RingFragRow] = {
+    val ts = thresholds
+    state.groupByKey(r => (r.gridId, r.ti))(GridKeyEnc)
+      .flatMapGroups { (key: (String, Int), it: Iterator[RingFragRow]) =>
+        if (key._2 < 0) it else ContourEngine.closeRings(key._1, key._2, ts(key._2), it).iterator
       }
   }
 
   /** Lake-checkpointed merge fixpoint with the same block hierarchy as
-    * [[closedRings]]: round 0 = kernel output, round l = merge level l;
-    * every round is committed as a snapshot of `lakeTable` (atomic
-    * manifest, per-partition row metrics, lineage chain), and on restart
-    * the latest completed round is read back and the fixpoint resumes
-    * after it — so a failed long job never re-runs finished rounds. Each
-    * round reads its input from the previous round's parquet, which
-    * doubles as reliable materialization on a real cluster.
+    * [[closedRings]]: round 0 = kernel output, round l = merge level l, the
+    * last round closing every ring. Every round is committed as a snapshot
+    * of `lakeTable` (atomic manifest, per-partition row metrics, lineage
+    * chain), and on restart the latest completed round is read back and the
+    * fixpoint resumes after it — so a failed long job never re-runs
+    * finished rounds. Each round reads its input from the previous round's
+    * parquet, which doubles as reliable materialization on a real cluster.
+    * Returns closed rings and markers only.
     */
   def closedRingsCheckpointed(tiles: Dataset[TileRow], lakeTable: String,
                               maxTileCoord: Int): Dataset[RingFragRow] = {
@@ -171,12 +148,12 @@ final class ContourEngine(spark: SparkSession, cfg: JobConfig) {
     }
     while (l < levels) {
       l += 1
-      val merged = mergeOpen(state.filter(!_.closed), l, levels)
-      val snap = Lake.commit(spark, lakeTable,
-        state.filter(_.closed).union(merged).toDF(), s"round-$l")
-      state = Lake.read(spark, snap).as[RingFragRow]
+      val next =
+        if (l < levels) state.filter(_.closed).union(mergeOpen(state.filter(!_.closed)))
+        else closeAll(state)
+      state = Lake.read(spark, Lake.commit(spark, lakeTable, next.toDF(), s"round-$l")).as[RingFragRow]
     }
-    state.filter(_.closed)
+    state
   }
 
   private def maxTileCoordOf(kernelOut: Dataset[RingFragRow]): Int = {
@@ -186,34 +163,33 @@ final class ContourEngine(spark: SparkSession, cfg: JobConfig) {
     if (row.isNullAt(0)) 0 else row.getInt(0)
   }
 
-  /** Kernel + merge with auto-derived round count: all closed rings (and
-    * ti = -1 markers) of the input tiles.
+  /** Kernel + every merge round, the last included, with auto-derived round
+    * count: all closed rings (and ti = -1 markers) of the input tiles.
     */
   def closedRingRows(tiles: Dataset[TileRow], hint: Option[Int] = None): Dataset[RingFragRow] =
-    closedOf(tiles, hint, cfg.smooth)
+    closeAll(closedOf(tiles, hint, cfg.smooth))
 
-  /** Persist+count the kernel output ONCE, then derive the round count from
-    * the cached ti = -1 markers — the no-hint path must never evaluate the
-    * dominant decode+kernel stage twice. Every cache is tracked by this
-    * engine, so releaseCaches() drops it.
+  /** The pre-final merge state of `tiles`. Without a hint the kernel output
+    * is persisted+counted ONCE and the round count derived from its cached
+    * ti = -1 markers — the no-hint path must never evaluate the dominant
+    * decode+kernel stage twice. releaseCaches() drops that cache too.
     */
   private def closedOf(tiles: Dataset[TileRow], hint: Option[Int],
                        smooth: Boolean): Dataset[RingFragRow] =
     hint match {
       case Some(m) => closedRings(kernelOf(tiles, smooth), m)
       case None =>
-        val ko = track(kernelOf(tiles, smooth).persist(StorageLevel.MEMORY_AND_DISK))
-        ko.count()
-        closedRingsImpl(ko, maxTileCoordOf(ko), prePersisted = true)
+        val ko = materialize(kernelOf(tiles, smooth))
+        closedRings(ko, maxTileCoordOf(ko))
     }
 
   /** Contour polygons — the reference's `contours()` distributed. */
   def contours(tiles: Dataset[TileRow], maxTileCoordHint: Option[Int] = None): Dataset[ContourRow] =
     contoursFrom(closedOf(tiles, maxTileCoordHint, cfg.smooth))
 
-  /** Assembly from closed rings + ti = -1 markers (post-merge state). */
-  def contoursFrom(closed: Dataset[RingFragRow]): Dataset[ContourRow] =
-    ContourEngine.reduceRings(closed, cfg) { (gid, t, rings) =>
+  /** Assembly from the pre-final merge state of [[closedRings]]. */
+  def contoursFrom(state: Dataset[RingFragRow]): Dataset[ContourRow] =
+    ContourEngine.reduceRings(state, cfg) { (gid, t, rings) =>
       ContourRow(gid, t, Assembly.assembleContour(rings).map(p => PolyRow(p.exterior, p.holes)))
     }
 
@@ -221,8 +197,8 @@ final class ContourEngine(spark: SparkSession, cfg: JobConfig) {
   def lines(tiles: Dataset[TileRow], maxTileCoordHint: Option[Int] = None): Dataset[LineRow] =
     linesFrom(closedOf(tiles, maxTileCoordHint, cfg.smooth))
 
-  def linesFrom(closed: Dataset[RingFragRow]): Dataset[LineRow] =
-    ContourEngine.reduceRings(closed, cfg)(LineRow)
+  def linesFrom(state: Dataset[RingFragRow]): Dataset[LineRow] =
+    ContourEngine.reduceRings(state, cfg)(LineRow)
 
   /** Raw rings in grid coordinates — the reference's `contour_rings`
     * (no smoothing or affine regardless of cfg).
@@ -240,49 +216,41 @@ final class ContourEngine(spark: SparkSession, cfg: JobConfig) {
     isobandsFrom(closedOf(tiles, maxTileCoordHint, cfg.smooth))
   }
 
-  def isobandsFrom(closed: Dataset[RingFragRow]): Dataset[BandRow] = {
+  /** Band assembly from the pre-final merge state of [[closedRings]]. */
+  def isobandsFrom(state: Dataset[RingFragRow]): Dataset[BandRow] = {
     val n = thresholds.length
     val ts = thresholds
     val (xs, ys, xo, yo) = (cfg.xStep, cfg.yStep, cfg.xOrigin, cfg.yOrigin)
     val ident = cfg.isIdentityAffine
     // Bands are assembled in CHUNKS of K consecutive bands per group: a
-    // threshold's rings feed at most two chunks (vs two bands), so the band
-    // shuffle ships ~(1 + 1/K)x the ring bytes instead of 2x, and the
-    // per-ring dedup/affine runs once per chunk instead of once per band.
-    // Each tile's ti = -1 marker fans out to one synthetic EMPTY row per
-    // chunk so every group exists — empty bands fall out of the same
-    // shuffle. Parallelism stays grids x ceil((n-1)/K) groups.
+    // threshold's rows (rings and open fragments) feed its bands ti - 1 and
+    // ti, so at most two chunks (vs two bands) — the band shuffle ships
+    // ~(1 + 1/K)x the ring bytes instead of 2x, and the last merge round and
+    // dedup/affine run once per chunk, not per band (a boundary threshold
+    // is merged in both its chunks, to the same rings). Each tile's ti = -1
+    // marker goes to every chunk so every group exists — empty bands fall
+    // out of the same shuffle. Parallelism is grids x ceil((n-1)/K) groups.
     val K = 4
     val numChunks = (n - 2) / K + 1
-    // rows: (gridId, chunk, ti, maxKey, pts)
-    val chunkRings = closed.flatMap { r =>
-      if (r.ti >= 0) {
-        val out = new ArrayBuffer[(String, Int, Int, Long, Array[Double])](2)
-        val cLo = if (r.ti - 1 >= 0) (r.ti - 1) / K else -1
-        val cHi = if (r.ti <= n - 2) r.ti / K else -1
-        if (cLo >= 0) out += ((r.gridId, cLo, r.ti, r.maxKey, r.pts))
-        if (cHi >= 0 && cHi != cLo) out += ((r.gridId, cHi, r.ti, r.maxKey, r.pts))
-        out.iterator
-      } else
-        (0 until numChunks).iterator.map(c =>
-          (r.gridId, c, -1, Long.MinValue, Array.empty[Double]))
-    }
-    chunkRings
-      .groupByKey(r => (r._1, r._2))
-      .flatMapGroups { (key: (String, Int), it: Iterator[(String, Int, Int, Long, Array[Double])]) =>
+    state.flatMap { r =>
+      val chunks = if (r.ti < 0) (0 until numChunks).iterator
+        else Iterator(r.ti - 1, r.ti).filter(b => b >= 0 && b <= n - 2).map(_ / K).distinct
+      chunks.map(ChunkRow(_, r))
+    }.groupByKey(r => (r.row.gridId, r.chunk))(GridKeyEnc)
+      .flatMapGroups { (key: (String, Int), it: Iterator[ChunkRow]) =>
         val (gid, chunk) = key
         val bLo = chunk * K
         val bHi = math.min(bLo + K, n - 1) // exclusive band end
-        val byTi = Array.fill(bHi - bLo + 1)(new ArrayBuffer[(Long, Array[Double])]())
-        it.foreach { r => if (r._3 >= 0) byTi(r._3 - bLo) += ((r._4, r._5)) }
-        // per threshold: closure-order sort, dedup, affine, length filter —
-        // computed ONCE and shared read-only by the two adjacent bands
-        val ringsByTi: Array[Seq[Array[Double]]] = byTi.map { rows =>
-          rows.sortInPlaceBy(_._1)
-          rows.iterator.map { case (_, pts) =>
-            val deduped = Assembly.dedupAdjacent(pts)
+        val byTi = Array.fill(bHi - bLo + 1)(new ArrayBuffer[RingFragRow]())
+        it.foreach { r => if (r.row.ti >= 0) byTi(r.row.ti - bLo) += r.row }
+        // per threshold: last merge round + closure-order sort, dedup,
+        // affine, length filter — computed ONCE and shared read-only by the
+        // two adjacent bands
+        val ringsByTi: Array[Seq[Array[Double]]] = Array.tabulate(byTi.length) { i =>
+          ContourEngine.closeRings(gid, bLo + i, ts(bLo + i), byTi(i).iterator).iterator.map { r =>
+            val deduped = Assembly.dedupAdjacent(r.pts)
             if (!ident) {
-              val cpy = if (deduped eq pts) pts.clone() else deduped
+              val cpy = if (deduped eq r.pts) r.pts.clone() else deduped
               Assembly.applyAffine(cpy, xs, ys, xo, yo)
               cpy
             } else deduped
@@ -300,6 +268,7 @@ final class ContourEngine(spark: SparkSession, cfg: JobConfig) {
     * document table as new text spans.
     */
   def contourFeatures(contours: Dataset[ContourRow]): Dataset[(String, Seq[String])] = {
+    import spark.implicits._
     contours.groupByKey(_.gridId).mapGroups { (gid: String, it: Iterator[ContourRow]) =>
       val feats = it.toArray.sortBy(_.threshold).map { c =>
         GeoJson.contourFeature(ContourResult(c.threshold,
@@ -311,6 +280,20 @@ final class ContourEngine(spark: SparkSession, cfg: JobConfig) {
 }
 
 object ContourEngine {
+
+  // Encoders derived once per JVM: `spark.implicits._` would derive them
+  // again by Scala reflection on the driver thread at every call.
+  private[engine] implicit val RingFragEnc: Encoder[RingFragRow] = Encoders.product[RingFragRow]
+  private[engine] implicit val ContourEnc: Encoder[ContourRow] = Encoders.product[ContourRow]
+  private[engine] implicit val LineEnc: Encoder[LineRow] = Encoders.product[LineRow]
+  private[engine] implicit val RingsEnc: Encoder[RingsRow] = Encoders.product[RingsRow]
+  private[engine] implicit val BandEnc: Encoder[BandRow] = Encoders.product[BandRow]
+  private[engine] implicit val ChunkEnc: Encoder[ChunkRow] = Encoders.product[ChunkRow]
+  private val GridKeyEnc: Encoder[(String, Int)] = Encoders.product[(String, Int)]
+  private val BlockKeyEnc: Encoder[(String, Int, Long)] = Encoders.product[(String, Int, Long)]
+
+  /** Band-shuffle row of isobandsFrom: `row` bound for band chunk `chunk`. */
+  final case class ChunkRow(chunk: Int, row: RingFragRow)
 
   /** The kernel's view of a stored tile: its owned samples and cells, plus
     * the virtual border cells (-1) of a tile on the grid's left/top edge.
@@ -353,6 +336,22 @@ object ContourEngine {
     ).toArray
   }
 
+  /** The last merge round of one (grid, threshold index `ti`) group, given
+    * all its rows: stitch the open fragments, fail loudly if any stay open,
+    * and return every ring (arrived closed or closed here) in closure
+    * (maxKey) order. Rows without points (backfill synthetics) are dropped.
+    */
+  def closeRings(gid: String, ti: Int, threshold: Double,
+                 rows: Iterator[RingFragRow]): Array[RingFragRow] = {
+    val (closed, open) = rows.filter(r => !r.closed || r.pts.nonEmpty).toArray.partition(_.closed)
+    val merged = if (open.isEmpty) open else mergeRows(gid, ti, 0, 0, open.iterator)
+    val left = merged.count(!_.closed)
+    if (left > 0)
+      throw new IllegalStateException(
+        s"$left fragments failed to close for grid=$gid threshold=$threshold ti=$ti")
+    (closed ++ merged).sortBy(_.maxKey)
+  }
+
   /** Merge rounds for tile coordinates up to `maxTileCoord`: one bit per
     * round, but a single global round for <= 8x8 tiles per grid, where the
     * hierarchy costs more sequential stages than it saves.
@@ -361,43 +360,29 @@ object ContourEngine {
     if (maxTileCoord <= 7) 1
     else math.max(1, 32 - Integer.numberOfLeadingZeros(math.max(1, maxTileCoord)))
 
-  /** Every (grid, ti in 0..n-1) group is guaranteed to exist in the
-    * assembly shuffle: real ring rows pass through, and each ti < 0 marker
-    * fans out to one synthetic EMPTY row per threshold index (empty pts —
-    * impossible for a real ring). The reducer skips the synthetics and so
-    * emits the reference's empty geometry for ring-less thresholds from
-    * the SAME shuffle — fully distributed backfill with zero extra stages
-    * (no driver collect, no distinct/except barrier).
-    */
-  private def withPotentialKeys(closed: Dataset[RingFragRow], nKeys: Int): Dataset[RingFragRow] = {
-    val spark = closed.sparkSession
-    import spark.implicits._
-    closed.flatMap { r =>
-      if (r.ti >= 0) Iterator.single(r)
-      else (0 until nKeys).iterator.map(ti =>
-        RingFragRow(r.gridId, ti, closed = true, 0, 0, 0L, 0L, Long.MinValue, 0, Array.empty))
-    }
-  }
-
   /** The ring reducer shared by contours, lines and raw rings: per (grid,
-    * threshold) group, skip empty rows, sort by closure order, apply cfg's
-    * affine transform in place (unless identity), then `assemble`.
+    * threshold) group, the last merge round (closeRings, closure-order sort
+    * included), cfg's affine transform in place (unless identity), then
+    * `assemble`. Every (grid, ti in 0..n-1) group exists: each ti < 0
+    * marker fans out to a copy per threshold index, whose empty pts
+    * (impossible for a real ring) closeRings drops — so ring-less
+    * thresholds get the reference's empty geometry from the SAME shuffle,
+    * with no driver collect and no extra stage.
     */
-  private def reduceRings[T: Encoder](closed: Dataset[RingFragRow], cfg: JobConfig)(
+  private def reduceRings[T: Encoder](state: Dataset[RingFragRow], cfg: JobConfig)(
       assemble: (String, Double, Seq[Array[Double]]) => T): Dataset[T] = {
-    val spark = closed.sparkSession
-    import spark.implicits._
     val ts = cfg.thresholds.toArray
     val (xs, ys, xo, yo) = (cfg.xStep, cfg.yStep, cfg.xOrigin, cfg.yOrigin)
     val ident = cfg.isIdentityAffine
-    withPotentialKeys(closed, ts.length)
-      .groupByKey(r => (r.gridId, r.ti))
+    state.flatMap(r => if (r.ti >= 0) Iterator.single(r) else ts.indices.iterator.map(ti => r.copy(ti = ti)))
+      .groupByKey(r => (r.gridId, r.ti))(GridKeyEnc)
       .mapGroups { (key: (String, Int), it: Iterator[RingFragRow]) =>
-        val rings = it.filter(_.pts.nonEmpty).toArray.sortBy(_.maxKey).map { r =>
+        val (gid, ti) = key
+        val rings = closeRings(gid, ti, ts(ti), it).map { r =>
           if (!ident) Assembly.applyAffine(r.pts, xs, ys, xo, yo)
           r.pts
         }
-        assemble(key._1, ts(key._2), ArraySeq.unsafeWrapArray(rings))
+        assemble(gid, ts(ti), ArraySeq.unsafeWrapArray(rings))
       }
   }
 }

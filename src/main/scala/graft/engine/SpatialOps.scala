@@ -45,6 +45,11 @@ object SpatialOps {
     * query and derives no typed encoder beyond its result's: that
     * driver-side work is a fixed cost of every call.
     *
+    * `contours` is read twice (the threshold set, then the rings), so
+    * persist it first: an unpersisted `ContourEngine.contours` re-runs its
+    * whole job on the second read, decode and kernel included when no
+    * kernel cache backs it (a hinted job at one merge level has none).
+    *
     * Returns (point_id: long, threshold: double, inside: boolean).
     */
   def pipTagPartitioned(spark: SparkSession, points: Dataset[(Long, Double, Double)],

@@ -223,19 +223,19 @@ object StreamingContour {
     val done = total > 0 && covered == total
     // merge this batch's open fragments with the carried ones, per
     // threshold; anything that closes is FINAL (FragmentMerge never
-    // reopens a closed ring) and is emitted now, not carried
+    // reopens a closed ring) and is emitted now, not carried. A completed
+    // grid runs the batch engine's last round, which fails on a fragment
+    // that stays open.
     val stillOpen = ArrayBuffer[RingFragRow]()
     open.groupBy(_.ti).foreach { case (ti, rows) =>
-      ContourEngine.mergeRows(gid, ti, 0, 0, rows.iterator)
+      if (done) emit ++= ContourEngine.closeRings(gid, ti, ts(ti), rows.iterator)
+      else ContourEngine.mergeRows(gid, ti, 0, 0, rows.iterator)
         .foreach(r => if (r.closed) emit += r else stillOpen += r)
     }
     if (!done) {
       state.update(GridState(covered, total, seen.toSeq, stillOpen.toSeq))
       emit.iterator
     } else {
-      if (stillOpen.nonEmpty)
-        throw new IllegalStateException(
-          s"${stillOpen.length} fragments failed to close for completed grid $gid")
       // tombstone: late arrivals after emission must fail loudly, not
       // silently restart the grid
       state.update(GridState(-1L, total, Nil, Nil))

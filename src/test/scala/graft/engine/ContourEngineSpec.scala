@@ -217,6 +217,64 @@ class ContourEngineSpec extends AnyFunSuite {
     assert(eng.trackedCacheCount == 0)
   }
 
+  test("one merge level: a hinted job persists nothing and tracks no cache") {
+    spark.catalog.clearCache() // start from an empty cache manager
+    val (data, w, h) = loadFixture("/fixtures/volcano.json")
+    val thresholds = (90 to 200 by 10).map(_.toDouble)
+    val tiles = GridSynth.tilesFromArray(spark, "g1l", data, w, h, 16, 16)
+    val eng = new ContourEngine(spark, JobConfig(thresholds, smooth = true))
+    // 87/16 -> tile coords up to 5 -> levels = 1: the last (only) merge
+    // round runs in the assembly reducer, behind no kernel cache or barrier
+    val got = eng.contours(tiles, Some(5)).collect().sortBy(_.threshold)
+    assert(eng.trackedCacheCount == 0, s"still tracked: ${eng.trackedCacheCount}")
+    assert(spark.sharedState.cacheManager.isEmpty, "a job at one merge level persisted a cache")
+    val core = new graft.core.CoreContour(graft.core.ContourConfig(w, h, smooth = true))
+    val want = core.contours(data, thresholds.toArray)
+    got.zip(want).foreach { case (g, w0) => assertPolys(g.polygons, w0.polygons, s"t=${g.threshold}") }
+  }
+
+  test("closedRingRows holds only closed rings and markers, at one and at four merge levels") {
+    val (data, w, h) = loadFixture("/fixtures/volcano.json")
+    val thresholds = (90 to 200 by 10).map(_.toDouble)
+    val core = new graft.core.CoreContour(graft.core.ContourConfig(w, h, smooth = true))
+    val want = thresholds.map(t => core.contourRings(data, t).length)
+    for (tile <- Seq(16, 8)) {
+      val tiles = GridSynth.tilesFromArray(spark, s"gr$tile", data, w, h, tile, tile)
+      val eng = new ContourEngine(spark, JobConfig(thresholds, smooth = true))
+      val rows = eng.closedRingRows(tiles).collect()
+      assert(rows.forall(_.closed), s"tiles $tile: an open row left the last round")
+      val perTi = thresholds.indices.map(ti => rows.count(_.ti == ti))
+      assert(perTi == want, s"tiles $tile: rings per threshold")
+      eng.releaseCaches()
+    }
+  }
+
+  // The tile drop leaves fragments that can never close; the assembly
+  // reducer's last merge round must name the grid, threshold and ti.
+  private def assertFailsToClose(run: => Any, gid: String, thresholds: Seq[Double]): Unit = {
+    val e = intercept[Exception](run)
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString("\n")
+    val m = s"fragments failed to close for grid=$gid threshold=(\\S+) ti=(\\d+)".r.findFirstMatchIn(msgs)
+    assert(m.isDefined, msgs)
+    assert(m.get.group(1).toDouble == thresholds(m.get.group(2).toInt), m.get.matched)
+  }
+
+  test("fragments that never close fail in the assembly reducer, naming grid, threshold and ti") {
+    val (data, w, h) = loadFixture("/fixtures/volcano.json")
+    val thresholds = (90 to 200 by 10).map(_.toDouble)
+    // 44x31 tiles -> 2x2 tiles, one merge level; 8x8 tiles -> 11x8 tiles,
+    // four merge levels. Each drops one tile that rings cross.
+    for ((tw, th, drop) <- Seq((44, 31, (1, 1)), (8, 8, (5, 4)))) {
+      val gid = s"gd$tw"
+      val tiles = GridSynth.tilesFromArray(spark, gid, data, w, h, tw, th)
+        .filter(t => (t.tileX, t.tileY) != drop)
+      val eng = new ContourEngine(spark, JobConfig(thresholds, smooth = true))
+      assertFailsToClose(eng.contours(tiles).collect(), gid, thresholds)
+      assertFailsToClose(eng.isobands(tiles).collect(), gid, thresholds)
+      eng.releaseCaches()
+    }
+  }
+
   test("external blob-store codec: identical tiles and pipeline output") {
     implicit val s = spark
     val tiles = GridSynth.tilesFromArray(spark, "gx", multiHoleGrid, 10, 10, 4, 4)
