@@ -32,7 +32,6 @@ object SparkEntry {
 
   /** events grid -> interleaved doc table -> decode (codec always on path) */
   private def eventTiles(spark: SparkSession, dir: String): Dataset[TileRow] = {
-    implicit val s = spark
     DocCodec.decode(DocCodec.encode(EventsGrid.tiles(spark, dir)))
   }
 
@@ -564,7 +563,6 @@ object SparkEntry {
 
     // ---- span-sequence invariant through append ----
     "q_span_invariant" -> ((spark, dir) => {
-      implicit val s = spark
       import spark.implicits._
       val docs = DocCodec.encode(EventsGrid.tiles(spark, dir))
       val eng = engine(spark)

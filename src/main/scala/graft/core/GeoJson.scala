@@ -44,9 +44,6 @@ object GeoJson {
   def bandFeature(b: BandResult): String =
     s"""{"type":"Feature","geometry":{"type":"MultiPolygon","coordinates":${multiPolygonJson(b.polygons)}},"properties":{"min_v":${num(b.minV)},"max_v":${num(b.maxV)}}}"""
 
-  def featureCollection(features: Seq[String]): String =
-    features.mkString("""{"type":"FeatureCollection","features":[""", ",", "]}")
-
   /** Every ring (exteriors + holes, in serialized order) parsed back OUT of
     * a Feature's MultiPolygon coordinates — the exact inverse of
     * multiPolygonJson for strings this serializer emits (shortest

@@ -126,6 +126,4 @@ final class Stitcher(gdx: Int) {
     out.sortInPlaceBy(_.maxKey)
     out
   }
-
-  def hasOpenFragments: Boolean = !byStart.isEmpty
 }

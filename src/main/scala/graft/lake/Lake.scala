@@ -927,9 +927,8 @@ object Lake {
   /** The abelian-group MERGE of two keyed aggregates in [[fullSums]]'s
     * schema (counts/sums may be signed on the delta side): per-key
     * component-wise addition through a full-outer join, keys whose
-    * count reaches zero dropping out. Shared by the CDC maintenance path
-    * ([[maintainSums]]) and the streaming IVM face
-    * (`streaming.StreamingIvm`) — one fold, two delta producers.
+    * count reaches zero dropping out. [[maintainSums]] folds a CDC delta
+    * through it; any other delta producer in [[fullSums]]'s schema can too.
     */
   def foldSums(matAgg: DataFrame, deltaAgg: DataFrame,
                keyCols: Seq[String], sumCols: Seq[String]): DataFrame = {

@@ -70,8 +70,8 @@ object StatsOps {
     hist
   }
 
-  /** The driver-side LOCATE step shared by [[autoThresholds]] and the
-    * streaming quantile locator: for each ladder quantile, the target
+  /** The driver-side LOCATE step shared by [[autoThresholds]] and
+    * `EventOps.convert`: for each ladder quantile, the target
     * 1-based rank k, its bucket, and the within-bucket offset. Pure
     * integer walk over the sorted (bucket, count) histogram.
     */
@@ -230,11 +230,10 @@ object StatsOps {
     * registers are what a production pipeline stores and merges. Only
     * occupied buckets emit (both sides agree by construction).
     */
-  /** The register pipeline over a one-column `uid` frame — shared VERBATIM
-    * by the batch contract query and streaming.StreamingDistinct (the
-    * same aggregation runs as a streaming COMPLETE-mode query: max/count
-    * merge monotonically, so Spark's aggregation state IS the sketch —
-    * bounded at m rows on an unbounded stream, no watermark needed).
+  /** The register pipeline over a one-column `uid` frame. Registers merge
+    * by max and row counts by addition, so the same aggregation also runs
+    * unchanged as a COMPLETE-mode streaming query whose state is the sketch
+    * (bounded at m rows on an unbounded stream, no watermark needed).
     */
   private[graft] def hllRegisterTable(ids: DataFrame): DataFrame = {
     val h = conv(substring(md5(concat(lit("hll#"), col("uid").cast("string"))), 1, 15),
@@ -264,10 +263,8 @@ object StatsOps {
     * true frequency is the classic CMS theorem — asserted for every user
     * in the spec; the contract emits the sketch cells themselves.
     */
-  /** The CMS cell aggregation over a frame carrying `user_id` — ONE
-    * definition shared verbatim by the batch contract query and
-    * streaming.StreamingCms (batch and stream cannot drift); counts are
-    * a commutative monoid, so the same plan is a valid complete-mode
+  /** The CMS cell aggregation over a frame carrying `user_id`. Counts are
+    * a commutative monoid, so the same plan is also a valid complete-mode
     * streaming aggregation with 128-long state.
     */
   private[graft] def cmsCellTable(events: DataFrame): DataFrame = {

@@ -40,7 +40,6 @@ object StreamingContour {
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        implicit val s: SparkSession = batch.sparkSession
         val docs = batch.as[Doc]
         val engine = new ContourEngine(batch.sparkSession, cfg)
         sink(engine.contours(DocCodec.decode(docs)), batchId)

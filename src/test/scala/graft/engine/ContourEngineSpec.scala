@@ -19,7 +19,6 @@ class ContourEngineSpec extends AnyFunSuite {
 
   private def tilesFor(values: Array[Double], dx: Int, dy: Int,
                        tw: Int, th: Int): Dataset[TileRow] = {
-    implicit val s = spark
     // round-trip through the document table so the codec is always exercised
     DocCodec.decode(DocCodec.encode(
       GridSynth.tilesFromArray(spark, "g1", values, dx, dy, tw, th)))
@@ -108,7 +107,6 @@ class ContourEngineSpec extends AnyFunSuite {
 
   test("issue18 fixture through pipeline (4x4 tiles)") {
     val (data, w, h) = loadFixture("/fixtures/issue18.json")
-    implicit val s = spark
     val tiles = DocCodec.decode(DocCodec.encode(
       GridSynth.tilesFromArray(spark, "g18", data, w, h, 4, 4)))
     val eng = new ContourEngine(spark, JobConfig(Seq(10.0), smooth = true))
@@ -124,7 +122,6 @@ class ContourEngineSpec extends AnyFunSuite {
     val thresholds = (90 to 200 by 5).map(_.toDouble)
     val core = new graft.core.CoreContour(graft.core.ContourConfig(w, h, smooth = true))
     val want = core.isobands(data, thresholds.toArray)
-    implicit val s = spark
     val tiles = DocCodec.decode(DocCodec.encode(
       GridSynth.tilesFromArray(spark, "gv", data, w, h, 16, 16)))
     val eng = new ContourEngine(spark, JobConfig(thresholds, smooth = true))
@@ -154,7 +151,6 @@ class ContourEngineSpec extends AnyFunSuite {
   }
 
   test("span-sequence invariant: appended GeoJSON spans preserve prefix") {
-    implicit val s = spark
     val docs = DocCodec.encode(
       GridSynth.tilesFromArray(spark, "g1", simpleGrid, 10, 10, 5, 5))
     val eng = new ContourEngine(spark, JobConfig(Seq(0.5), smooth = true))
@@ -168,7 +164,6 @@ class ContourEngineSpec extends AnyFunSuite {
   }
 
   test("degenerate grid dims (1xN, Nx1, 1x1) through the pipeline") {
-    implicit val s = spark
     val eng = new ContourEngine(spark, JobConfig(Seq(0.5), smooth = true))
     for ((dx, dy) <- Seq((1, 8), (8, 1), (1, 1), (2, 2))) {
       val vals = Array.tabulate(dx * dy)(i => (i % 2).toDouble)
@@ -186,7 +181,6 @@ class ContourEngineSpec extends AnyFunSuite {
     val thresholds = (90 to 200 by 10).map(_.toDouble)
     val core = new graft.core.CoreContour(graft.core.ContourConfig(w, h, smooth = true))
     val want = core.contours(data, thresholds.toArray)
-    implicit val s = spark
     // 87/8 -> tile coords up to 10 -> levels = 4: the one-bit-per-round
     // block hierarchy runs several real rounds before the global one
     val tiles = DocCodec.decode(DocCodec.encode(
@@ -203,7 +197,6 @@ class ContourEngineSpec extends AnyFunSuite {
   test("deep hierarchy releases intermediate round caches; releaseCaches drops the rest") {
     val (data, w, h) = loadFixture("/fixtures/volcano.json")
     val thresholds = (90 to 200 by 10).map(_.toDouble)
-    implicit val s = spark
     val tiles = DocCodec.decode(DocCodec.encode(
       GridSynth.tilesFromArray(spark, "gcc", data, w, h, 8, 8)))
     val eng = new ContourEngine(spark, JobConfig(thresholds, smooth = true))
@@ -276,7 +269,6 @@ class ContourEngineSpec extends AnyFunSuite {
   }
 
   test("external blob-store codec: identical tiles and pipeline output") {
-    implicit val s = spark
     val tiles = GridSynth.tilesFromArray(spark, "gx", multiHoleGrid, 10, 10, 4, 4)
     val (docs, blobs) = DocCodec.encodeExternal(tiles)
     val viaExternal = DocCodec.decodeExternal(docs, blobs).collect().sortBy(t => (t.tileY, t.tileX))
@@ -299,8 +291,39 @@ class ContourEngineSpec extends AnyFunSuite {
     assertRing(got(1).exterior, multiHoleExpected2Ext, "ext1")
   }
 
+  test("bad tile: a truncated payload or a header without vw fails naming grid and tile") {
+    import spark.implicits._
+    val tiles = GridSynth.tilesFromArray(spark, "gbad", simpleGrid, 10, 10, 5, 5).collect().toSeq
+    // only tile (1, 0) is bad, so the error must say which tile it is
+    def isBad(t: TileRow) = t.tileX == 1 && t.tileY == 0
+    val whole = spark.createDataset(tiles)
+    val truncated = spark.createDataset(tiles.map(t =>
+      if (isBad(t)) t.copy(values = t.values.dropRight(1)) else t))
+    def dropVw(d: Doc) =
+      if (d.doc_id != "ggbad-t0_1") d
+      else d.copy(spans = d.spans.map(s => s.copy(media_ref = s.media_ref.replaceFirst("&vw=\\d+", ""))))
+    def viaExternal(ts: Dataset[TileRow], edit: Doc => Doc) = {
+      val (docs, blobs) = DocCodec.encodeExternal(ts)
+      DocCodec.decodeExternal(docs.map(edit), blobs)
+    }
+    val cases = Seq[(String, () => Dataset[TileRow], String)](
+      ("decode, truncated payload", () => DocCodec.decode(DocCodec.encode(truncated)),
+        "bytes, expected vw*vh*8"),
+      ("decodeExternal, truncated payload", () => viaExternal(truncated, identity),
+        "bytes, expected vw*vh*8"),
+      ("decode, header lacks vw", () => DocCodec.decode(DocCodec.encode(whole).map(dropVw)),
+        "header lacks vw"),
+      ("decodeExternal, header lacks vw", () => viaExternal(whole, dropVw), "header lacks vw"))
+    for ((what, run, reason) <- cases) {
+      val e = intercept[Exception](run().collect())
+      val named = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case x: IllegalArgumentException => x.getMessage }
+      assert(named.exists(m => m.contains("grid gbad tile (1, 0)") && m.contains(reason)),
+        s"$what: $e")
+    }
+  }
+
   test("multiple grids in one job stay independent") {
-    implicit val s = spark
     val t1 = GridSynth.tilesFromArray(spark, "gA", simpleGrid, 10, 10, 5, 5)
     val t2 = GridSynth.tilesFromArray(spark, "gB", multiGrid, 10, 10, 4, 4)
     val t3 = GridSynth.tilesFromArray(spark, "gC", zeros10x10, 10, 10, 10, 10)

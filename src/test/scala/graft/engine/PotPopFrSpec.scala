@@ -24,7 +24,6 @@ class PotPopFrSpec extends AnyFunSuite {
   private val (xs, ys) = (0.11875873095057177, -0.08993203637245273)
 
   test("isobands with negative y_step affine: distributed == core, skewed thresholds") {
-    implicit val s = spark
     val (data, w, h) = Goldens.loadFixture("/fixtures/pot_pop_fr.json")
     val core = new CoreContour(ContourConfig(w, h, smooth = true, xo, yo, xs, ys))
     val want = core.isobands(data, thresholds.toArray)
@@ -45,7 +44,6 @@ class PotPopFrSpec extends AnyFunSuite {
   }
 
   test("contours with negative y_step: orientation-flipped classification matches core") {
-    implicit val s = spark
     val (data, w, h) = Goldens.loadFixture("/fixtures/pot_pop_fr.json")
     val ts = Seq(105483.25, 2109665.0)
     val core = new CoreContour(ContourConfig(w, h, smooth = true, xo, yo, xs, ys))

@@ -13,7 +13,6 @@ class StreamingContourSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
   test("appended grids are re-contoured per micro-batch, matching batch output") {
-    implicit val s = spark
     import spark.implicits._
     val inDir = Files.createTempDirectory("stream-in")
     val ckpt = Files.createTempDirectory("stream-ckpt").toString
@@ -62,7 +61,6 @@ class StreamingContourSpec extends AnyFunSuite {
   }
 
   test("stateful stream: one grid's tiles split across two micro-batches == batch") {
-    implicit val s = spark
     import spark.implicits._
     val inDir = Files.createTempDirectory("sstream-in")
     val ckpt = Files.createTempDirectory("sstream-ckpt").toString
@@ -103,7 +101,6 @@ class StreamingContourSpec extends AnyFunSuite {
   }
 
   test("ring store is grid-partitioned: completion reads only that grid's files") {
-    implicit val s = spark
     import spark.implicits._
     val inDir = Files.createTempDirectory("pstream-in")
     val ckpt = Files.createTempDirectory("pstream-ckpt").toString
@@ -173,7 +170,6 @@ class StreamingContourSpec extends AnyFunSuite {
   }
 
   test("start and startStateful leave the caller's session conf as it was") {
-    implicit val s = spark
     val key = "spark.sql.parquet.columnarReaderBatchSize"
     val caller = spark.newSession()
     caller.conf.set(key, "48")
