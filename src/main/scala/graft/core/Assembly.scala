@@ -13,12 +13,15 @@ final case class Poly(exterior: Array[Double], holes: Seq[Array[Double]])
   *    u64-truncated |area|, even-odd enclosure depth, holes to first
   *    containing exterior, then reverse (contourbuilder.rs:231-341).
   *
-  * The O(n^2) containment joins go through RingIndex, whose per-vertex
-  * bbox + degenerate-line short circuit makes far-apart ring pairs O(1)
-  * per query while staying exactly equivalent to the reference's walk —
-  * including the wrap-line quirk (the degenerate closing segment marks the
+  * Every containment test the reference makes between two rings is kept,
+  * in the same order, and answered by a [[RingIndex]] of the enclosing
+  * ring. A pair whose hole's first vertex lies outside the enclosing
+  * ring's claim box ([[RingIndex.mayClaim]]) is -1 without a walk, since
+  * contains returns the first non-zero vertex verdict; the boxes sit in
+  * one packed array, so the all-pairs scan does not touch every ring.
+  * The wrap-line quirk stays: the degenerate closing segment marks the
   * whole horizontal line through the ring's first vertex as on-boundary,
-  * verdict 0, which sends the walk on to the hole's later vertices).
+  * verdict 0, which sends the walk on to the hole's later vertices.
   */
 object Assembly {
 
@@ -82,13 +85,13 @@ object Assembly {
       } else holes += ring
     }
     if (holes.nonEmpty) {
-      val idx = new Array[RingIndex](exteriors.length)
+      val idx = exteriors.iterator.map(new RingIndex(_)).toArray
+      val boxes = RingIndex.claimBoxes(idx)
       holes.foreach { hole =>
         var i = 0
         var done = false
         while (i < exteriors.length && !done) {
-          if (idx(i) == null) idx(i) = new RingIndex(exteriors(i))
-          if (idx(i).containsRing(hole) != -1) {
+          if (claims(idx, boxes, i, hole)) {
             extHoles(i) += hole
             done = true
           }
@@ -106,13 +109,14 @@ object Assembly {
     * reference (contourbuilder.rs:286-338).
     */
   def assembleBand(rings: Seq[Array[Double]]): Seq[Poly] = {
-    val sorted = rings.sortBy(r => math.abs(Geom.area2(r)).toLong) // stable
-    val n = sorted.length
-    val idx = new Array[RingIndex](n)
-    @inline def indexOf(j: Int): RingIndex = {
-      if (idx(j) == null) idx(j) = new RingIndex(sorted(j))
-      idx(j)
-    }
+    val in = rings.toArray
+    val n = in.length
+    val keys = in.map(r => math.abs(Geom.area2(r)).toLong)
+    // Array[Int].sortBy sorts boxed indices with java.util.Arrays.sort,
+    // which is stable; each key is computed once, not per comparison
+    val sorted = Array.range(0, n).sortBy(keys(_)).map(in(_))
+    val idx = sorted.map(new RingIndex(_))
+    val boxes = RingIndex.claimBoxes(idx)
     val enclosedBy = new Array[Int](n)
     var i = 0
     while (i < n) {
@@ -120,42 +124,45 @@ object Assembly {
       var cnt = 0
       var j = 0
       while (j < n) {
-        if (j != i && indexOf(j).containsRing(ring) != -1) cnt += 1
+        if (j != i && claims(idx, boxes, j, ring)) cnt += 1
         j += 1
       }
       enclosedBy(i) = cnt
       i += 1
     }
-    val exteriors = new ArrayBuffer[Array[Double]]()
-    val extSortedIdx = new ArrayBuffer[Int]() // exterior k = sorted(extSortedIdx(k))
+    val exteriors = new ArrayBuffer[Int]() // indices into sorted
     val extHoles = new ArrayBuffer[ArrayBuffer[Array[Double]]]()
     val interiors = new ArrayBuffer[Array[Double]]()
     i = 0
     while (i < n) {
       if (enclosedBy(i) % 2 == 0) {
-        exteriors += sorted(i)
-        extSortedIdx += i
+        exteriors += i
         extHoles += new ArrayBuffer[Array[Double]]()
       } else interiors += sorted(i)
       i += 1
     }
-    if (interiors.nonEmpty) {
-      // reuse the enclosure loop's RingIndexes (same rings, already built —
-      // including any lazily-filled CSR buckets) instead of re-indexing
-      interiors.foreach { hole =>
-        var k = 0
-        var done = false
-        while (k < exteriors.length && !done) {
-          if (indexOf(extSortedIdx(k)).containsRing(hole) != -1) {
-            extHoles(k) += hole
-            done = true
-          }
-          k += 1
+    interiors.foreach { hole =>
+      var k = 0
+      var done = false
+      while (k < exteriors.length && !done) {
+        if (claims(idx, boxes, exteriors(k), hole)) {
+          extHoles(k) += hole
+          done = true
         }
+        k += 1
       }
     }
     exteriors.indices.reverseIterator
-      .map(i => Poly(exteriors(i), extHoles(i).toSeq))
+      .map(k => Poly(sorted(exteriors(k)), extHoles(k).toSeq))
       .toSeq
   }
+
+  /** contains(ring k, hole) != -1, i.e. inside or on the boundary: -1
+    * without a walk when hole's first vertex lies outside ring k's claim
+    * box.
+    */
+  private def claims(idx: Array[RingIndex], boxes: Array[Double], k: Int,
+                     hole: Array[Double]): Boolean =
+    (hole.length < 2 || RingIndex.mayClaim(boxes, k, hole(0), hole(1))) &&
+      idx(k).containsRing(hole) != -1
 }

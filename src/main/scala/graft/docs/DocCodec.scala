@@ -124,10 +124,14 @@ object DocCodec {
     */
   def decode(docs: Dataset[Doc]): Dataset[TileRow] = {
     val ref = col("s.media_ref")
+    // a span with no inline payload keeps its whole ref as the header and
+    // a null payload, so tileOf names its tile
+    val at = instr(ref, InlinePayload)
     rasterSpans(docs)
       .select(
-        substring(ref, lit(1), instr(ref, InlinePayload) - 1),
-        unbase64(expr(s"substring(s.media_ref, instr(s.media_ref, '$InlinePayload') + ${InlinePayload.length})")))
+        when(at > 0, substring(ref, lit(1), at - 1)).otherwise(ref),
+        when(at > 0, unbase64(expr(
+          s"substring(s.media_ref, instr(s.media_ref, '$InlinePayload') + ${InlinePayload.length})"))))
       .as[(String, Array[Byte])]
       .map { case (meta, payload) => tileOf(meta, payload) }
   }

@@ -246,7 +246,7 @@ final class ContourEngine(spark: SparkSession, cfg: JobConfig) {
         // per threshold: last merge round + closure-order sort, dedup,
         // affine, length filter — computed ONCE and shared read-only by the
         // two adjacent bands
-        val ringsByTi: Array[Seq[Array[Double]]] = Array.tabulate(byTi.length) { i =>
+        val ringsByTi: Array[Array[Array[Double]]] = Array.tabulate(byTi.length) { i =>
           ContourEngine.closeRings(gid, bLo + i, ts(bLo + i), byTi(i).iterator).iterator.map { r =>
             val deduped = Assembly.dedupAdjacent(r.pts)
             if (!ident) {
@@ -254,12 +254,12 @@ final class ContourEngine(spark: SparkSession, cfg: JobConfig) {
               Assembly.applyAffine(cpy, xs, ys, xo, yo)
               cpy
             } else deduped
-          }.filter(_.length / 2 > 3).toSeq
+          }.filter(_.length / 2 > 3).toArray
         }
         (bLo until bHi).iterator.map { b =>
           val rings = ringsByTi(b - bLo) ++ ringsByTi(b + 1 - bLo)
           BandRow(gid, ts(b), ts(b + 1),
-            Assembly.assembleBand(rings).map(p => PolyRow(p.exterior, p.holes)))
+            Assembly.assembleBand(ArraySeq.unsafeWrapArray(rings)).map(p => PolyRow(p.exterior, p.holes)))
         }
       }
   }

@@ -302,6 +302,9 @@ class ContourEngineSpec extends AnyFunSuite {
     def dropVw(d: Doc) =
       if (d.doc_id != "ggbad-t0_1") d
       else d.copy(spans = d.spans.map(s => s.copy(media_ref = s.media_ref.replaceFirst("&vw=\\d+", ""))))
+    def dropPayload(d: Doc) =
+      if (d.doc_id != "ggbad-t0_1") d
+      else d.copy(spans = d.spans.map(s => s.copy(media_ref = s.media_ref.replaceFirst("&d=.*$", ""))))
     def viaExternal(ts: Dataset[TileRow], edit: Doc => Doc) = {
       val (docs, blobs) = DocCodec.encodeExternal(ts)
       DocCodec.decodeExternal(docs.map(edit), blobs)
@@ -313,7 +316,9 @@ class ContourEngineSpec extends AnyFunSuite {
         "bytes, expected vw*vh*8"),
       ("decode, header lacks vw", () => DocCodec.decode(DocCodec.encode(whole).map(dropVw)),
         "header lacks vw"),
-      ("decodeExternal, header lacks vw", () => viaExternal(whole, dropVw), "header lacks vw"))
+      ("decodeExternal, header lacks vw", () => viaExternal(whole, dropVw), "header lacks vw"),
+      ("decode, inline span without &d=", () => DocCodec.decode(DocCodec.encode(whole).map(dropPayload)),
+        "no payload"))
     for ((what, run, reason) <- cases) {
       val e = intercept[Exception](run().collect())
       val named = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
