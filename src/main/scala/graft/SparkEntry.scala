@@ -68,21 +68,26 @@ object SparkEntry {
     * pipeline shared by the moments/box/compactness/crossings/distance/
     * hausdorff/turning/clip consumers).
     */
-  private def smoothContours(spark: SparkSession, dir: String): Dataset[ContourRow] = {
-    import spark.implicits._
-    graft.queries.Feeds.shared(spark, dir, "contours_smooth") {
-      engine(spark).contours(eventTilesF(spark, dir)).toDF()
-    }.as[ContourRow]
-  }
+  private def smoothContours(spark: SparkSession, dir: String): Dataset[ContourRow] =
+    contourFeed(spark, dir, "contours_smooth", smooth = true)
 
   /** Assembled UNSMOOTHED contours (the pixel-center-exact variant shared
     * by the PIP/zonal/knn/rasterize consumers).
     */
-  private def rawContours(spark: SparkSession, dir: String): Dataset[ContourRow] = {
+  private def rawContours(spark: SparkSession, dir: String): Dataset[ContourRow] =
+    contourFeed(spark, dir, "contours_raw", smooth = false)
+
+  /** The feed is checkpointed once `Feeds.shared` returns, so the kernel and
+    * merge-round caches the engine persisted to build it are dropped then.
+    */
+  private def contourFeed(spark: SparkSession, dir: String, name: String,
+                          smooth: Boolean): Dataset[ContourRow] = {
     import spark.implicits._
-    graft.queries.Feeds.shared(spark, dir, "contours_raw") {
-      engine(spark, smooth = false).contours(eventTilesF(spark, dir)).toDF()
+    val eng = engine(spark, smooth)
+    try graft.queries.Feeds.shared(spark, dir, name) {
+      eng.contours(eventTilesF(spark, dir)).toDF()
     }.as[ContourRow]
+    finally eng.releaseCaches()
   }
 
   private def thresholdsDf(spark: SparkSession): DataFrame = {

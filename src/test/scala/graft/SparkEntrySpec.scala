@@ -3,7 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Driver-contract smoke: entry() returns rows on sf0.001; every declared
-  * query runs there; oracleSql keys are a subset of queries.
+  * query runs there; oracleSql keys are a subset of queries; a contour feed
+  * leaves no engine cache in the session.
   */
 class SparkEntrySpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -21,6 +22,14 @@ class SparkEntrySpec extends AnyFunSuite {
   test("span invariant holds on sf0.001") {
     val row = SparkEntry.queries("q_span_invariant")(spark, sf).collect().head
     assert(row.getAs[Boolean]("ok"))
+  }
+
+  test("a contour feed leaves no engine cache behind") {
+    // a new session has its own temp views, so the feed is built here
+    val session = spark.newSession()
+    session.catalog.clearCache()
+    SparkEntry.queries("q_contours_stats")(session, sf).collect()
+    assert(session.sharedState.cacheManager.isEmpty, "the contour feed left a cache behind")
   }
 
   test("all queries execute on sf0.001") {
